@@ -10,10 +10,11 @@ rank junk docs as most target-like, so a top-10,000 select should be
 SemDeDup leg: 1M hash-derived dim-16 vectors; vec_id % 100 == 1 copies
 its predecessor's vector exactly (10,000 planted exact duplicates —
 cosine 1.0, same cluster by construction). n_lists = 4096 (~sqrt-N
-regime: mean cluster ~244, so the within-cluster pair join stays
-near-linear), assign="udf" (one Arrow matmul per batch — the
-large-n_lists path). Expected drops = the 10,000 planted copies (ties
-keep the lower id) plus a handful of chance cos>=0.95 pairs in dim 16.
+regime: mean cluster ~244, so the within-cluster pair work stays
+near-linear), assign="udf", pairs="local" (one Arrow matmul per batch
+and per-cluster BLAS dominance — the large-n_lists path). Expected
+drops = the 10,000 planted copies (ties keep the lower id) plus a
+handful of chance cos>=0.95 pairs in dim 16.
 
 Usage: python BENCH/selection_scale.py [n=1000000]
 """
@@ -55,7 +56,7 @@ def synthetic_embeddings(spark, n: int, partitions: int, dim: int = 16):
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     legs = set(
-        (sys.argv[2] if len(sys.argv) > 2 else "dsir,clf,semdedup,semdedup_local")
+        (sys.argv[2] if len(sys.argv) > 2 else "dsir,clf,semdedup_local")
         .split(",")
     )
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -154,39 +155,6 @@ def main() -> None:
 
     # --- SemDeDup ---
     emb = synthetic_embeddings(spark, n, cpus * 2)
-    if "semdedup" in legs:
-        t0 = time.perf_counter()
-        sd = semantic_dedup(
-            emb,
-            threshold=0.95,
-            n_lists=4096,
-            dim=16,
-            assign="udf",
-            max_cluster=100_000,
-        )
-        r = sd.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum((~F.col("kept")).cast("long")).alias("dropped"),
-            F.sum(((~F.col("kept")) & (F.col("vec_id") % 100 == 1)).cast("long")).alias(
-                "dropped_planted"
-            ),
-            F.countDistinct("list_id").alias("n_clusters"),
-        ).collect()[0]
-        results["semantic_dedup"] = {
-            "wall_s": round(time.perf_counter() - t0, 2),
-            "rows": r.n,
-            "dropped": int(r.dropped),
-            "dropped_planted": int(r.dropped_planted),
-            "planted": n // 100,
-            "clusters_used": int(r.n_clusters),
-        }
-        print(
-            "LEG " + json.dumps({"semantic_dedup": results["semantic_dedup"]}),
-            flush=True,
-        )
-
-    # pairs="local" twin: identical semantics, per-cluster BLAS
-    # dominance instead of the quadratic HOF pair join
     if "semdedup_local" in legs:
         t0 = time.perf_counter()
         sdl = semantic_dedup(

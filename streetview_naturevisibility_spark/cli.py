@@ -317,39 +317,43 @@ def cmd_curate(args: argparse.Namespace) -> None:
             f"({args.decontam_n}-gram overlap vs blocklist)"
         )
 
+    def swap_in_deduped(docs, stage_out, tag: str, what: str):
+        """Checkpoint a text-rewrite stage's output once, print its
+        removal count, and swap its ``text_deduped`` in for ``text``."""
+        stage_out = stage_out.localCheckpoint(eager=True)
+        n_removed = stage_out.agg(F.sum("n_removed")).collect()[0][0] or 0
+        print(f"[{tag}] removed={n_removed} {what}")
+        return docs.drop("text").join(
+            stage_out.select("doc_id", F.col("text_deduped").alias("text")),
+            "doc_id",
+        )
+
     if getattr(args, "para_dedup", False):
         # boilerplate removal BEFORE scoring: quality/LM judge the
         # text the downstream corpus will actually contain
         from .operators.textops import paragraph_dedup
 
-        pd_out = paragraph_dedup(
+        docs = swap_in_deduped(
             docs,
-            max_docs=getattr(args, "para_max_docs", 1),
-            min_chars=getattr(args, "para_min_chars", 0),
-        ).localCheckpoint(eager=True)
-        n_para_removed = pd_out.agg(F.sum("n_removed")).collect()[0][0] or 0
-        docs = docs.drop("text").join(
-            pd_out.select("doc_id", F.col("text_deduped").alias("text")),
-            "doc_id",
+            paragraph_dedup(
+                docs,
+                max_docs=getattr(args, "para_max_docs", 1),
+                min_chars=getattr(args, "para_min_chars", 0),
+            ),
+            "para",
+            "boilerplate paragraph instances",
         )
-        print(f"[para] removed={n_para_removed} boilerplate paragraph instances")
 
     if getattr(args, "chunk_dedup", None):
         # substring-level dedup (RETRO-chunk approximation): cut every
         # repeated L-char chunk except its globally-first occurrence
         from .operators.textops import chunk_dedup
 
-        cd_out = chunk_dedup(docs, chunk_chars=args.chunk_dedup).localCheckpoint(
-            eager=True
-        )
-        n_chunks_removed = cd_out.agg(F.sum("n_removed")).collect()[0][0] or 0
-        docs = docs.drop("text").join(
-            cd_out.select("doc_id", F.col("text_deduped").alias("text")),
-            "doc_id",
-        )
-        print(
-            f"[chunk] removed={n_chunks_removed} duplicated "
-            f"{args.chunk_dedup}-char chunk instances"
+        docs = swap_in_deduped(
+            docs,
+            chunk_dedup(docs, chunk_chars=args.chunk_dedup),
+            "chunk",
+            f"duplicated {args.chunk_dedup}-char chunk instances",
         )
 
     if getattr(args, "span_dedup", None):
@@ -358,17 +362,11 @@ def cmd_curate(args: argparse.Namespace) -> None:
         # the chunk grid; pairs naturally with --c4)
         from .operators.textops import span_dedup_c4
 
-        sd_out = span_dedup_c4(docs, n_sents=args.span_dedup).localCheckpoint(
-            eager=True
-        )
-        n_spans_removed = sd_out.agg(F.sum("n_removed")).collect()[0][0] or 0
-        docs = docs.drop("text").join(
-            sd_out.select("doc_id", F.col("text_deduped").alias("text")),
-            "doc_id",
-        )
-        print(
-            f"[span] removed={n_spans_removed} duplicated "
-            f"{args.span_dedup}-sentence span instances"
+        docs = swap_in_deduped(
+            docs,
+            span_dedup_c4(docs, n_sents=args.span_dedup),
+            "span",
+            f"duplicated {args.span_dedup}-sentence span instances",
         )
 
     if getattr(args, "chunk_dedup_cdc", None):
@@ -377,17 +375,12 @@ def cmd_curate(args: argparse.Namespace) -> None:
         # position — see BENCH/BASELINE.md "grid-alignment recall")
         from .operators.textops import chunk_dedup_cdc
 
-        cdc_out = chunk_dedup_cdc(docs, avg_tokens=args.chunk_dedup_cdc).localCheckpoint(
-            eager=True
-        )
-        n_cdc_removed = cdc_out.agg(F.sum("n_removed")).collect()[0][0] or 0
-        docs = docs.drop("text").join(
-            cdc_out.select("doc_id", F.col("text_deduped").alias("text")),
-            "doc_id",
-        )
-        print(
-            f"[chunk-cdc] removed={n_cdc_removed} duplicated "
-            f"content-defined chunk instances (~{args.chunk_dedup_cdc} tokens)"
+        docs = swap_in_deduped(
+            docs,
+            chunk_dedup_cdc(docs, avg_tokens=args.chunk_dedup_cdc),
+            "chunk-cdc",
+            "duplicated content-defined chunk instances "
+            f"(~{args.chunk_dedup_cdc} tokens)",
         )
 
     if (

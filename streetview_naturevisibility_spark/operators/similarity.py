@@ -447,19 +447,53 @@ def pairwise_cosine_col(va, vb):
     return dot / (norm(va) * norm(vb))
 
 
+def _ccos_assigner(centroids: np.ndarray):
+    """NumPy kernel shared by the Arrow assignment paths: maps a stacked
+    float64 batch ``mat`` (rows = vectors) to (list id, cosine to the
+    assigned centroid, unit-normalized rows). Nearest centroid is the
+    argmin of ``|v|^2 - 2 v.c + |c|^2`` (ties -> lowest list id).
+
+    Chunked, buffer-reusing distance computation: a full
+    (batch x n_lists) float64 matrix at 10k x 4096 is ~330 MB and the
+    naive expression allocates several of them PER BATCH — with N
+    workers that is an mmap/page-fault storm (measured >95% system
+    CPU, 673 s for the 1M-vector leg). One 4096-row scratch buffer
+    reused in place keeps the resident set flat."""
+    cn2 = (centroids**2).sum(axis=1)
+    cnorm = np.sqrt(cn2)
+    ct = np.ascontiguousarray(centroids.T)
+
+    def assign(mat: np.ndarray):
+        nrow = len(mat)
+        vnorm = np.sqrt((mat**2).sum(axis=1))
+        v2 = vnorm**2
+        lid = np.empty(nrow, dtype=np.int64)
+        CH = 4096
+        dbuf = np.empty((min(CH, nrow), len(cn2)))
+        for s0 in range(0, nrow, CH):
+            e = min(s0 + CH, nrow)
+            nb = e - s0
+            np.matmul(mat[s0:e], ct, out=dbuf[:nb])
+            dbuf[:nb] *= -2.0
+            dbuf[:nb] += cn2[None, :]
+            dbuf[:nb] += v2[s0:e, None]
+            lid[s0:e] = dbuf[:nb].argmin(axis=1)
+        # dot(v, assigned centroid) recomputed cheaply (nrow x dim)
+        dd = np.einsum("ij,ij->i", mat, centroids[lid])
+        cc = dd / (vnorm * cnorm[lid])
+        return lid, cc, mat / vnorm[:, None]
+
+    return assign
+
+
 def make_assign_ccos_udf(centroids: np.ndarray):
     """(list id, cosine-to-assigned-centroid, UNIT-NORMALIZED vector)
-    per input vector in ONE Arrow pass — a matmul per batch, so
-    ``n_lists`` can be thousands (the SemDeDup sqrt(N)-clusters
-    regime) without the literal-expression blowup of the pure-Column
-    path. Emitting the normalized vector here means the downstream
-    pair join computes cosine as a SINGLE dot-product fold instead of
-    dot + two norms (3x fewer higher-order-function evaluations on the
-    quadratic pair stream — measured 3.4x on the 1M-vector bench
-    leg)."""
+    per input vector in ONE Arrow pass — a matmul per batch
+    (``_ccos_assigner``), so ``n_lists`` can be thousands (the SemDeDup
+    sqrt(N)-clusters regime) without the literal-expression blowup of
+    the pure-Column path."""
     from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
-    cnorm = np.sqrt((centroids**2).sum(axis=1))
     out_t = StructType(
         [
             StructField("list_id", IntegerType()),
@@ -467,9 +501,7 @@ def make_assign_ccos_udf(centroids: np.ndarray):
             StructField("vn", ArrayType(DoubleType())),
         ]
     )
-
-    cn2 = (centroids**2).sum(axis=1)
-    ct = np.ascontiguousarray(centroids.T)
+    assign_np = _ccos_assigner(centroids)
 
     @F.pandas_udf(out_t)
     def assign_ccos(vecs: pd.Series) -> pd.DataFrame:
@@ -486,54 +518,27 @@ def make_assign_ccos_udf(centroids: np.ndarray):
         mat = np.stack(
             vecs[mask].map(lambda v: np.asarray(v, dtype=np.float64)).to_numpy()
         )
-        nrow = len(mat)
-        vnorm = np.sqrt((mat**2).sum(axis=1))
-        v2 = vnorm**2
-        lid = np.empty(nrow, dtype=np.int64)
-        # Chunked, buffer-reusing distance computation: a full
-        # (batch x n_lists) float64 matrix at 10k x 4096 is ~330 MB
-        # and the naive expression allocates several of them PER
-        # BATCH — with N workers that is an mmap/page-fault storm
-        # (measured >95% system CPU, 673 s for the 1M-vector leg).
-        # One 4096-row scratch buffer reused in place keeps the
-        # resident set flat.
-        CH = 4096
-        dbuf = np.empty((min(CH, nrow), len(cn2)))
-        for s0 in range(0, nrow, CH):
-            e = min(s0 + CH, nrow)
-            nb = e - s0
-            np.matmul(mat[s0:e], ct, out=dbuf[:nb])
-            dbuf[:nb] *= -2.0
-            dbuf[:nb] += cn2[None, :]
-            dbuf[:nb] += v2[s0:e, None]
-            lid[s0:e] = dbuf[:nb].argmin(axis=1)
-        # dot(v, assigned centroid) recomputed cheaply (nrow x dim)
-        dd = np.einsum("ij,ij->i", mat, centroids[lid])
-        cc = dd / (vnorm * cnorm[lid])
+        lid, cc, vn = assign_np(mat)
         out.loc[mask, "list_id"] = lid.astype(np.int32)
         out.loc[mask, "ccos"] = cc
-        out.loc[mask, "vn"] = pd.Series(
-            list(mat / vnorm[:, None]), index=out.index[mask]
-        )
+        out.loc[mask, "vn"] = pd.Series(list(vn), index=out.index[mask])
         return out
 
     return assign_ccos
 
 
 def _assign_ccos_vnb_batches(centroids: np.ndarray):
-    """mapInPandas twin of ``make_assign_ccos_udf`` for the
-    pairs='local' path (r7): identical assignment arithmetic (same
-    chunked ``|v|^2 - 2 v.c + |c|^2`` matmul, same argmin, same cosine),
+    """mapInPandas form of ``make_assign_ccos_udf`` for the
+    pairs='local' path (r7): the same ``_ccos_assigner`` arithmetic,
     but the unit-normalized vector leaves the stage as ONE flat
     float64 BINARY cell instead of an Arrow list<double> — the pair
     stage then rebuilds each cluster's matrix with a single
     ``np.frombuffer`` instead of 10k-per-batch list conversions
     (guide §4.2: binary columns are re-sliced buffers, not per-element
     structures)."""
-    cn2 = (centroids**2).sum(axis=1)
-    cnorm = np.sqrt(cn2)
-    ct = np.ascontiguousarray(centroids.T)
     from typing import Iterator
+
+    assign_np = _ccos_assigner(centroids)
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -560,27 +565,11 @@ def _assign_ccos_vnb_batches(centroids: np.ndarray):
                         if m
                     ]
                 )
-                nrow = len(mat)
-                vnorm = np.sqrt((mat**2).sum(axis=1))
-                v2 = vnorm**2
-                lid = np.empty(nrow, dtype=np.int64)
-                CH = 4096
-                dbuf = np.empty((min(CH, nrow), len(cn2)))
-                for s0 in range(0, nrow, CH):
-                    e = min(s0 + CH, nrow)
-                    nb = e - s0
-                    np.matmul(mat[s0:e], ct, out=dbuf[:nb])
-                    dbuf[:nb] *= -2.0
-                    dbuf[:nb] += cn2[None, :]
-                    dbuf[:nb] += v2[s0:e, None]
-                    lid[s0:e] = dbuf[:nb].argmin(axis=1)
-                dd = np.einsum("ij,ij->i", mat, centroids[lid])
-                cc = dd / (vnorm * cnorm[lid])
-                vn = mat / vnorm[:, None]
+                lid, cc, vn = assign_np(mat)
                 out.loc[mask, "list_id"] = lid.astype(np.int32)
                 out.loc[mask, "ccos"] = cc
                 out.loc[mask, "vnb"] = pd.Series(
-                    [vn[i].tobytes() for i in range(nrow)],
+                    [vn[i].tobytes() for i in range(len(vn))],
                     index=out.index[mask],
                 )
             yield out
@@ -589,35 +578,27 @@ def _assign_ccos_vnb_batches(centroids: np.ndarray):
 
 
 def _local_cluster_dups(
-    capped: DataFrame, threshold: float, keep: str, vn_col: str = "vn"
+    capped: DataFrame, threshold: float, keep: str
 ) -> DataFrame:
     """Dominated ids per cluster via ONE applyInPandas pass: blocked
     ``m @ m.T`` cosine matrix (unit vectors -> dot == cosine) and a
     vectorized dominance reduction. Row-chunked so a cluster at the
     ``max_cluster`` cap stays ~80 MB of scratch, not O(c^2) resident
-    (the allocation-storm lesson from make_assign_ccos_udf).
-    ``vn_col="vnb"`` reads the flat-binary unit vectors (one
-    frombuffer per cluster, zero per-row conversion)."""
+    (the allocation-storm lesson from ``_ccos_assigner``). Reads the
+    flat-binary unit vectors ``vnb`` (one frombuffer per cluster, zero
+    per-row conversion)."""
     from pyspark.sql.types import StructField, StructType
 
     out_t = StructType([StructField("id", capped.schema["id"].dataType)])
     flip = keep == "farthest"
     thr = float(threshold)
-    binary_vn = vn_col == "vnb"
 
     def f(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf[pdf[vn_col].notna()]
+        pdf = pdf[pdf["vnb"].notna()]
         n = len(pdf)
         if n < 2:
             return pdf.iloc[0:0][["id"]]
-        if binary_vn:
-            m = np.frombuffer(b"".join(pdf[vn_col]), dtype=np.float64).reshape(
-                n, -1
-            )
-        else:
-            m = np.stack(
-                pdf[vn_col].map(lambda v: np.asarray(v, dtype=np.float64)).to_numpy()
-            )
+        m = np.frombuffer(b"".join(pdf["vnb"]), dtype=np.float64).reshape(n, -1)
         ids = pdf["id"].to_numpy()
         cc = pdf["ccos"].to_numpy(dtype=np.float64)
         dom = np.zeros(n, dtype=bool)
@@ -684,25 +665,27 @@ def semantic_dedup(
     quantizer would add one bounded-sample fit like ``build_ivf_index``
     without changing this plan.
 
-    ``assign="column"`` (default) is the oracle-exact literal-Column
-    path — right for small ``n_lists``. ``assign="udf"`` computes
-    (list_id, ccos, unit-normalized vector) in one chunked Arrow
-    matmul per batch (``make_assign_ccos_udf``) so ``n_lists`` can be
-    thousands — the sqrt(N)-clusters production shape.
+    Two execution paths, chosen together by ``(assign, pairs)``:
 
-    ``pairs="join"`` (default) evaluates the within-cluster dominance
-    predicate as a JVM equi-join — oracle-exact arithmetic, and the
-    only option for ``assign="column"``. ``pairs="local"`` (requires
-    ``assign="udf"``) replaces the pair join with ONE
-    groupBy(list_id).applyInPandas pass: per cluster, a blocked
-    ``m @ m.T`` cosine matrix and a vectorized dominance reduction —
-    the same single shuffle on list_id, but the quadratic inner loop
-    runs as BLAS instead of per-pair interpreted array folds
-    (measured 10.9x on the 1M-vector leg — 121.2 s vs 11.2 s,
-    identical outputs; see BENCH/BASELINE.md).
-    Pairwise dots differ from the fold path in the last ulp (BLAS
-    summation order), so decisions exactly AT the threshold may
-    differ — callers needing twin-exact arithmetic use "join".
+    - ``("column", "join")`` (default) — the oracle-exact path for small
+      ``n_lists``: assignment is literal-Column math and the
+      within-cluster dominance predicate is a JVM equi-join with the
+      same fold arithmetic the DuckDB twin restates.
+    - ``("udf", "local")`` — the scale path: (list_id, ccos,
+      unit-normalized vector) come from one chunked Arrow matmul per
+      batch (``_ccos_assigner``), so ``n_lists`` can be thousands (the
+      sqrt(N)-clusters production shape), and the pair join is
+      replaced by ONE groupBy(list_id).applyInPandas pass: per
+      cluster, a blocked ``m @ m.T`` cosine matrix and a vectorized
+      dominance reduction — the same single shuffle on list_id, but
+      the quadratic inner loop runs as BLAS instead of per-pair
+      interpreted array folds (measured 10.9x on the 1M-vector leg —
+      121.2 s vs 11.2 s, identical outputs; see BENCH/BASELINE.md).
+      Pairwise dots differ from the fold path in the last ulp (BLAS
+      summation order), so decisions exactly AT the threshold may
+      differ — callers needing twin-exact arithmetic use the default.
+
+    Any other combination raises ``ValueError``.
     """
     if keep not in ("closest", "farthest"):
         raise ValueError(f"keep must be 'closest' or 'farthest', got {keep!r}")
@@ -710,8 +693,11 @@ def semantic_dedup(
         raise ValueError(f"assign must be 'column' or 'udf', got {assign!r}")
     if pairs not in ("join", "local"):
         raise ValueError(f"pairs must be 'join' or 'local', got {pairs!r}")
-    if pairs == "local" and assign != "udf":
-        raise ValueError("pairs='local' requires assign='udf' (needs vn)")
+    if (assign == "udf") != (pairs == "local"):
+        raise ValueError(
+            "pairs='local' requires assign='udf' and assign='udf' requires "
+            f"pairs='local', got assign={assign!r}, pairs={pairs!r}"
+        )
     from .dedup import _cap_buckets
 
     # data-adapted quantizer (kmeans_fit on a sample, or kmeans_fit_df
@@ -722,38 +708,35 @@ def semantic_dedup(
     else:
         centroids = pinned_centroids(n_lists, dim, seed)
     base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    vn_col = "vn"
-    pair_sim = None
     if assign == "udf":
-        # scale path: one Arrow matmul per batch — n_lists can be
-        # thousands (sqrt(N) clusters keeps the pair join near-linear);
-        # the pure-Column path below is the oracle-exact small-k twin.
-        # The frame is checkpointed across its consumers (cap sizes,
-        # pair stage, output) — assignment computes ONCE.
-        if pairs == "local":
-            # r7: the local pair kernel consumes whole clusters, so the
-            # unit vectors travel as flat binary (one frombuffer per
-            # cluster) — same assignment arithmetic, far cheaper Arrow
-            idt = base.schema["id"].dataType.simpleString()
-            s = base.mapInPandas(
-                _assign_ccos_vnb_batches(centroids),
-                f"id {idt}, list_id int, ccos double, vnb binary",
-            )
-            vn_col = "vnb"
-        else:
-            ac = make_assign_ccos_udf(centroids)
-            s = base.withColumn("_ac", ac(F.col("v"))).select(
-                "id",
-                F.col("_ac.list_id").alias("list_id"),
-                F.col("_ac.ccos").alias("ccos"),
-                F.col("_ac.vn").alias("vn"),
-            )
-            pair_sim = F.aggregate(
-                F.zip_with(F.col("a.vn"), F.col("b.vn"), lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        materialize = True
+        # The unit vectors travel as flat binary (one frombuffer per
+        # cluster in the local pair kernel). The assignment frame is
+        # materialized ONCE as raw row blocks (localCheckpoint, not
+        # persist: the columnar cache build costs ~4x a block write for
+        # array columns) and every consumer (cap sizes, pair stage,
+        # output join) reads them; blocks are reclaimed by the
+        # ContextCleaner when the returned frame is dropped.
+        from pyspark import StorageLevel
+
+        idt = base.schema["id"].dataType.simpleString()
+        s = base.mapInPandas(
+            _assign_ccos_vnb_batches(centroids),
+            f"id {idt}, list_id int, ccos double, vnb binary",
+        ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        capped, metrics = _cap_buckets(s, ["list_id"], max_cluster)
+        # the (small, dup-ids-only) frame is eagerly checkpointed so
+        # repeated consumer actions don't re-run the pair stage. Note
+        # this makes the dedup compute at CALL time. When the dup set
+        # is genuinely small (it is checkpointed, so the count is
+        # free), broadcast it so the kept-flag attach never shuffles
+        # the assignment frame — a checkpointed frame has
+        # no size statistics, so Catalyst would otherwise sort-merge.
+        dominated = _local_cluster_dups(capped, threshold, keep).localCheckpoint(
+            eager=True
+        )
+        dup_flag = dominated.withColumn("_dup", F.lit(True))
+        if dominated.count() <= 10_000_000:
+            dup_flag = F.broadcast(dup_flag)
     else:
         cos_arr = F.array(
             *[cosine_col(F.col("v"), [float(x) for x in c]) for c in centroids]
@@ -761,41 +744,23 @@ def semantic_dedup(
         s = base.withColumn(
             "list_id", ivf_assign_col(F.col("v"), centroids)
         ).withColumn("ccos", F.element_at(cos_arr, F.col("list_id") + 1))
-        # oracle-exact pair arithmetic (dot / (|a| |b|)) — the DuckDB
-        # twin restates it verbatim; no persist (cheap codegen frame)
-        pair_sim = pairwise_cosine_col(F.col("a.v"), F.col("b.v"))
-        materialize = False
-    if materialize:
-        # r7: localCheckpoint instead of persist — the assignment frame
-        # is materialized ONCE as raw row blocks and every consumer
-        # (cap sizes, pair stage, output join) reads them; the former
-        # persist/unpersist lifecycle recomputed the 1M x n_lists Arrow
-        # matmul once more for the output action, and the columnar
-        # cache build itself costs ~4x a block write for array columns
-        # (measured on the dsir bucket arrays). Blocks are reclaimed by
-        # the ContextCleaner when the returned frame is dropped.
-        from pyspark import StorageLevel
-
-        s = s.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.DISK_ONLY
+        capped, metrics = _cap_buckets(s, ["list_id"], max_cluster)
+        a, b = capped.alias("a"), capped.alias("b")
+        better = (
+            (F.col("b.ccos") > F.col("a.ccos"))
+            if keep == "closest"
+            else (F.col("b.ccos") < F.col("a.ccos"))
         )
-    capped, metrics = _cap_buckets(s, ["list_id"], max_cluster)
-    a, b = capped.alias("a"), capped.alias("b")
-    better = (
-        (F.col("b.ccos") > F.col("a.ccos"))
-        if keep == "closest"
-        else (F.col("b.ccos") < F.col("a.ccos"))
-    )
-    if pairs == "local":
-        dominated = _local_cluster_dups(capped, threshold, keep, vn_col)
-    else:
+        # oracle-exact pair arithmetic (dot / (|a| |b|)) — the DuckDB
+        # twin restates it verbatim; no materialization (cheap codegen
+        # frame)
         dominated = (
             a.join(
                 b,
                 (F.col("a.list_id") == F.col("b.list_id"))
                 & (F.col("a.id") != F.col("b.id")),
             )
-            .where(pair_sim >= F.lit(threshold))
+            .where(pairwise_cosine_col(F.col("a.v"), F.col("b.v")) >= F.lit(threshold))
             .where(
                 better
                 | (
@@ -806,19 +771,7 @@ def semantic_dedup(
             .select(F.col("a.id").alias("id"))
             .distinct()
         )
-    dup_flag = dominated.withColumn("_dup", F.lit(True))
-    if materialize:
-        # the (small, dup-ids-only) frame is eagerly checkpointed so
-        # repeated consumer actions don't re-run the pair stage. Note
-        # this makes the dedup compute at CALL time. When the dup set
-        # is genuinely small (it is checkpointed, so the count is
-        # free), broadcast it so the kept-flag attach never shuffles
-        # the assignment frame (guide §3.1) — a checkpointed frame has
-        # no size statistics, so Catalyst would otherwise sort-merge.
-        dominated = dominated.localCheckpoint(eager=True)
         dup_flag = dominated.withColumn("_dup", F.lit(True))
-        if dominated.count() <= 10_000_000:
-            dup_flag = F.broadcast(dup_flag)
     out = (
         s.join(
             dup_flag,

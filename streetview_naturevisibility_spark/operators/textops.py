@@ -23,13 +23,6 @@ STOPWORDS = {
 }
 
 
-def lang_score_col(text_col: str, lang: str):
-    """score(lang) = |distinct_tokens ∩ stopwords(lang)| (JVM-only)."""
-    toks = F.array_distinct(F.split(F.col(text_col), " "))
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    return F.size(F.array_intersect(toks, sw))
-
-
 def lang_id_col(text_col: str):
     """Heuristic language ID: argmax over stopword hit counts, fold
     tie-break (first language in alphabetical order wins ties) — the
@@ -258,18 +251,6 @@ def _shingle_hashes(text_col: str, n: int):
     return F.transform(shingles_col(text_col, n), lambda s: F.xxhash64(s))
 
 
-def _blocklist_hash_array(blocklist: DataFrame, text_col: str, n: int) -> DataFrame:
-    """The blocklist's distinct shingle hashes as ONE single-row array
-    column ``blk`` — the shared hash contract of the broadcast batch
-    path and the streaming path (one definition so null-handling and
-    hashing can never drift between them)."""
-    return (
-        blocklist.select(F.explode(_shingle_hashes(text_col, n)).alias("h"))
-        .distinct()
-        .agg(F.collect_set("h").alias("blk"))
-    )
-
-
 def contaminated_ids(
     docs: DataFrame,
     blocklist: DataFrame,
@@ -277,20 +258,16 @@ def contaminated_ids(
     id_col: str = "doc_id",
     block_text_col: str = "text",
     n: int = 13,
-    method: str = "join",
 ) -> DataFrame:
     """Docs sharing ANY n-gram (default 13 — the published GPT-3/PaLM
     decontamination window) with the blocklist corpus -> (id, n_hits).
 
-    ``method="join"`` (default, MEASURED): explode doc shingle hashes
-    and LEFT SEMI shuffle-join against the blocklist hash set — 18.5 s
-    per 1M docs vs a 1,000-doc blocklist at local[32]; also the only
-    path for blocklists too big to broadcast. ``method="broadcast"``:
-    the blocklist's distinct hashes collapsed to ONE array joined as a
-    single-row broadcast, each doc evaluating `array_intersect` — zero
-    corpus shuffle, but the per-row set probe costs more than the
-    exploded shuffle at corpus scale (28.1 s same shape, and argument
-    order matters: blocklist array FIRST, 3.3x over the reverse).
+    Plan: explode doc shingle hashes and LEFT SEMI shuffle-join against
+    the blocklist hash set — 18.5 s per 1M docs vs a 1,000-doc
+    blocklist at local[32], and it also serves blocklists too big to
+    broadcast. (A single-row broadcast of the blocklist hash array with
+    a per-doc ``array_intersect`` avoids the corpus shuffle but measured
+    slower at corpus scale: 28.1 s on the same shape.)
     Collision note: both sides use the same xxhash64 shingle hash, so
     real overlaps are NEVER missed; a 2^-64 hash collision can only
     add a spurious (conservative) drop."""
@@ -300,28 +277,13 @@ def contaminated_ids(
     blk_h = blocklist.select(
         F.explode(_shingle_hashes(block_text_col, n)).alias("h")
     ).distinct()
-    if method == "broadcast":
-        blk_arr = _blocklist_hash_array(blocklist, block_text_col, n)
-        return (
-            doc_h.join(F.broadcast(blk_arr))
-            .select(
-                F.col("id").alias(id_col),
-                # blk FIRST: array_intersect's lookup structure comes
-                # from its first argument — measured 3.3x faster than
-                # intersecting (hs, blk) at 1M docs
-                F.size(F.array_intersect("blk", "hs")).alias("n_hits"),
-            )
-            .where(F.col("n_hits") > 0)
-        )
-    if method == "join":
-        hits = (
-            doc_h.select("id", F.explode("hs").alias("h"))
-            .join(blk_h, "h", "left_semi")
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("n_hits"))
-        )
-        return hits.select(F.col("id").alias(id_col), "n_hits")
-    raise ValueError(f"unknown method {method!r}")
+    hits = (
+        doc_h.select("id", F.explode("hs").alias("h"))
+        .join(blk_h, "h", "left_semi")
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).alias("n_hits"))
+    )
+    return hits.select(F.col("id").alias(id_col), "n_hits")
 
 
 def decontaminate(
@@ -330,7 +292,6 @@ def decontaminate(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 13,
-    method: str = "join",
 ) -> DataFrame:
     """Drop every doc sharing an n-gram with the blocklist (anti-join
     on the contaminated id set). No forced broadcast: hit sets are
@@ -340,7 +301,7 @@ def decontaminate(
     would then die on the driver where a shuffled anti-join
     succeeds."""
     bad = contaminated_ids(
-        docs, blocklist, text_col=text_col, id_col=id_col, n=n, method=method
+        docs, blocklist, text_col=text_col, id_col=id_col, n=n
     ).select(id_col)
     return docs.join(bad, id_col, "left_anti")
 
@@ -387,13 +348,17 @@ def decontaminate_streaming(
     usable directly inside `readStream -> ... -> writeStream` (batch
     `decontaminate` computes the contaminated-id set first, which
     would be a disallowed stream self-join). Same hash contract as the
-    batch paths, so batch == stream row-for-row (pytest-gated)."""
-    blk_arr = _blocklist_hash_array(blocklist, text_col, n)
+    batch path, so batch == stream row-for-row (pytest-gated)."""
+    blk_arr = (
+        blocklist.select(F.explode(_shingle_hashes(text_col, n)).alias("h"))
+        .distinct()
+        .agg(F.collect_set("h").alias("blk"))
+    )
     out = docs.withColumn("_hs", _shingle_hashes(text_col, n)).join(
         F.broadcast(blk_arr)
     )
     # coalesce: a NULL text yields NULL shingles -> NULL intersect; the
-    # batch paths KEEP such docs (they can't be contaminated), so the
+    # batch path KEEPS such docs (they can't be contaminated), so the
     # stream must too or batch == stream breaks on null-text rows
     return out.where(
         F.coalesce(F.size(F.array_intersect("blk", "_hs")), F.lit(0)) == 0
@@ -1342,21 +1307,6 @@ def dsir_select(
 # broadcast weight join + one per-doc-sum shuffle, exactly the
 # dsir_score plan.
 # ------------------------------------------------------------------
-def _clf_feature_rows(docs, text_col, id_col, n_buckets):
-    """(id, b, inv_n) rows: each hashed-gram instance of a doc with
-    the doc's 1/n_feats weight (fastText length normalization). The
-    bucket array is materialized once per row so explode and size see
-    the same computation (no double hashing)."""
-    arr = hashed_ngram_buckets_col(text_col, n_buckets)
-    return docs.select(
-        F.col(id_col).alias("id"), arr.alias("_fb")
-    ).select(
-        "id",
-        F.explode("_fb").alias("b"),
-        (F.lit(1.0) / F.size("_fb")).alias("inv_n"),
-    )
-
-
 def train_quality_classifier(
     pos_texts: list[str],
     neg_texts: list[str],

@@ -20,6 +20,8 @@ the corpus.
 
 from __future__ import annotations
 
+import hashlib
+import json
 from typing import Iterator
 
 import pandas as pd
@@ -90,20 +92,43 @@ def _ranks_bc(spark: SparkSession, merges: list[tuple[str, str]]):
 # (spark.python.worker.reuse default), and this module is importable on
 # executors, so a module-level cache survives between tasks and turns
 # the per-task re-encode of the hot vocabulary into dict hits. Keyed by
-# a fingerprint of the merge list (a new tokenizer invalidates the
-# cache); bounded — adversarial corpora with unbounded distinct words
-# (e.g. random-digit junk) would otherwise grow it without limit.
+# a SHA-256 digest of the merge list (a new tokenizer invalidates the
+# cache; Python's hash() of the tuple could collide across merge
+# lists); bounded on every insert — adversarial corpora with unbounded
+# distinct words (e.g. random-digit junk) would otherwise grow it
+# without limit inside one task.
 _COUNT_CACHE: dict = {}
 _COUNT_CACHE_KEY: object = None
 _COUNT_CACHE_CAP = 2_000_000
 
 
-def _count_cache_for(key) -> dict:
+def _merges_digest(merges: list[tuple[str, str]]) -> str:
+    return hashlib.sha256(json.dumps(merges).encode("utf-8")).hexdigest()
+
+
+def _count_cache_for(key: str) -> dict:
     global _COUNT_CACHE_KEY
-    if _COUNT_CACHE_KEY != key or len(_COUNT_CACHE) > _COUNT_CACHE_CAP:
+    if _COUNT_CACHE_KEY != key:
         _COUNT_CACHE.clear()
         _COUNT_CACHE_KEY = key
     return _COUNT_CACHE
+
+
+def _memo_subword_count(text: str | None, ranks: dict, cache: dict) -> int:
+    """Subword count of one text, word counts memoized in ``cache``
+    (cleared before an insert would pass ``_COUNT_CACHE_CAP``)."""
+    if text is None:
+        return 0
+    total = 0
+    for w in pretokenize(text):
+        c = cache.get(w)
+        if c is None:
+            c = len(encode_word(w, ranks))
+            if len(cache) >= _COUNT_CACHE_CAP:
+                cache.clear()
+            cache[w] = c
+        total += c
+    return total
 
 
 def bpe_encode(
@@ -137,7 +162,7 @@ def bpe_token_count(
     """Append a real subword count (packing/budget input). Same kernel
     as ``bpe_encode`` but only the length crosses Arrow back."""
     bc = _ranks_bc(df.sparkSession, merges)
-    key = hash(tuple(merges))
+    key = _merges_digest(merges)
 
     @F.pandas_udf("long")
     def cnt(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
@@ -146,21 +171,8 @@ def bpe_token_count(
         # vocabulary's subword counts across reused workers (§4.5)
         ranks = bc.value
         cache = _count_cache_for(key)
-
-        def n_tok(t):
-            if t is None:
-                return 0
-            total = 0
-            for w in pretokenize(t):
-                c = cache.get(w)
-                if c is None:
-                    c = len(encode_word(w, ranks))
-                    cache[w] = c
-                total += c
-            return total
-
         for batch in texts:
-            yield batch.map(n_tok)
+            yield batch.map(lambda t: _memo_subword_count(t, ranks, cache))
 
     return df.withColumn(out_col, cnt(F.col(text_col)))
 

@@ -32,12 +32,11 @@ def run_pipeline(
     zoom: int = 14,
     utm_zone: int = 31,
     cut_by_road_centres: bool = False,
-    salt: int | None = None,
 ) -> dict[str, DataFrame]:
     """Returns the pipeline's named stage outputs (lazy DataFrames)."""
     points = sample_points(roads, spacing=spacing, zoom=zoom, utm_zone=utm_zone)
     pages = prepare_pages(pages_raw, zoom=zoom, utm_zone=utm_zone, keep_text=True)
-    snapped = knn_snap(points, pages, max_distance=max_distance, zoom=zoom, salt=salt)
+    snapped = knn_snap(points, pages, max_distance=max_distance, zoom=zoom)
     gvi_points = score_snapped_points(snapped, pages, cut_by_road_centres)
     intersection = build_intersection(gvi_points, points, roads)
     per_road = gvi_per_road(intersection)

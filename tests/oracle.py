@@ -116,6 +116,22 @@ def oracle_fingerprint(text: str, window: int = 8) -> int:
     return v - M if v >= (1 << 63) else v
 
 
+def oracle_minhash(shingle_hashes, k: int):
+    """Pure-Python MinHash fold over one row's 32-bit shingle hashes —
+    the parity oracle for operators/dedup._minhash_fold_kernel: slot j
+    is min over h of ``(a_j * h + b_j) mod 2^32`` with the engine's
+    pinned permutation parameters. NULL -> NULL; an empty array keeps
+    the init sentinel 2^33 (above every reachable value) in all slots."""
+    from streetview_naturevisibility_spark.operators.dedup import _perm_params
+
+    if shingle_hashes is None:
+        return None
+    return [
+        min(((a * h + b) % (1 << 32) for h in shingle_hashes), default=1 << 33)
+        for a, b in _perm_params(k)
+    ]
+
+
 # ---------------------------------------------------------------- GVI scorer
 # Independent scalar port of the reference scorer over the engine's
 # token-label payload analog. Shares NO code with
@@ -544,8 +560,8 @@ def duckdb_contamination_overlap(
 def duckdb_token_budget_select(
     docs: pd.DataFrame, budgets: dict[str, int], default_budget: int = 0
 ) -> pd.DataFrame:
-    """ANSI-SQL twin of operators/corpus.token_budget_select (window
-    semantics — the bucketed method must equal this too): per stratum,
+    """ANSI-SQL twin of operators/corpus.token_budget_select in its
+    direct window form (the engine's bucketed plan must equal it): per stratum,
     order by (quality DESC NULLS LAST, doc_id), keep while the
     inclusive running token sum fits the stratum budget."""
     import duckdb
@@ -554,6 +570,13 @@ def duckdb_token_budget_select(
     con.register("docs", docs)
     cases = " ".join(
         f"WHEN '{k}' THEN {int(v)}" for k, v in sorted(budgets.items())
+    )
+    # a CASE needs at least one WHEN: no listed strata -> every row
+    # gets the default budget
+    budget = (
+        f"CASE lang {cases} ELSE {int(default_budget)} END"
+        if cases
+        else str(int(default_budget))
     )
     out = con.sql(
         f"""
@@ -567,7 +590,7 @@ def duckdb_token_budget_select(
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
           FROM t)
         SELECT * EXCLUDE (cum) FROM c
-        WHERE cum <= (CASE lang {cases} ELSE {int(default_budget)} END)
+        WHERE cum <= ({budget})
         ORDER BY doc_id
         """
     ).df()

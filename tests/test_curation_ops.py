@@ -275,12 +275,9 @@ class TestTokenBudgetSelect:
             ],
             self.SCHEMA,
         )
-        for method in ["window", "bucketed"]:
-            kept = token_budget_select(
-                docs, {"en": 9}, method=method
-            ).collect()
-            assert {r.doc_id for r in kept} == {1}, method
-            assert kept[0].n_tokens == 4
+        kept = token_budget_select(docs, {"en": 9}).collect()
+        assert {r.doc_id for r in kept} == {1}
+        assert kept[0].n_tokens == 4
 
     def test_window_matches_duckdb_twin(self, spark):
         import pandas as pd
@@ -289,7 +286,7 @@ class TestTokenBudgetSelect:
         budgets = {"en": 40, "de": 10_000, "fr": 0}
         docs = spark.createDataFrame(rows, self.SCHEMA)
         got = (
-            token_budget_select(docs, budgets, method="window")
+            token_budget_select(docs, budgets)
             .toPandas()
             .sort_values("doc_id")
             .reset_index(drop=True)
@@ -302,31 +299,30 @@ class TestTokenBudgetSelect:
         assert list(got["n_tokens"]) == list(want["n_tokens"])
 
     def test_bucketed_equals_window(self, spark):
+        """The bucketed plan equals the direct cumulative-window form,
+        restated by the DuckDB twin, over a grid of budgets x
+        ``n_buckets`` on a tie-heavy corpus."""
+        import pandas as pd
+
         rows = _budget_corpus()
         docs = spark.createDataFrame(rows, self.SCHEMA)
+        docs_pd = pd.DataFrame(rows, columns=["doc_id", "text", "lang", "quality_score"])
         for budgets, default in [
             ({"en": 40, "de": 55, "fr": 1}, 0),
             ({"en": 3, "de": 10_000}, 5),
             ({}, 37),
         ]:
-            base = {
-                r.doc_id
-                for r in token_budget_select(
-                    docs, budgets, default_budget=default, method="window"
-                ).collect()
-            }
+            want = duckdb_token_budget_select(docs_pd, budgets, default_budget=default)
             for nb in [2, 64, 1024]:
-                got = {
-                    r.doc_id
-                    for r in token_budget_select(
-                        docs,
-                        budgets,
-                        default_budget=default,
-                        method="bucketed",
-                        n_buckets=nb,
-                    ).collect()
-                }
-                assert got == base, (budgets, default, nb)
+                got = (
+                    token_budget_select(
+                        docs, budgets, default_budget=default, n_buckets=nb
+                    )
+                    .toPandas()
+                    .sort_values("doc_id")
+                )
+                assert list(got["doc_id"]) == list(want["doc_id"]), (budgets, default, nb)
+                assert list(got["n_tokens"]) == list(want["n_tokens"]), (budgets, default, nb)
 
     def test_null_strata_and_quality(self, spark):
         docs = spark.createDataFrame(
@@ -337,25 +333,24 @@ class TestTokenBudgetSelect:
             ],
             self.SCHEMA,
         )
-        for method in ["window", "bucketed"]:
-            # default budget covers NULL lang; NULL-text doc counts as
-            # 0 tokens so it rides along while budget remains
-            kept = {
-                r.doc_id
-                for r in token_budget_select(
-                    docs, {"en": 5}, default_budget=2, method=method
-                ).collect()
-            }
-            assert kept == {1, 2, 3}, method
-            # default 0 drops the NULL-lang doc; en keeps 3 then the
-            # free 0-token doc 2
-            kept = {
-                r.doc_id
-                for r in token_budget_select(
-                    docs, {"en": 5}, default_budget=0, method=method
-                ).collect()
-            }
-            assert kept == {2, 3}, method
+        # default budget covers NULL lang; NULL-text doc counts as
+        # 0 tokens so it rides along while budget remains
+        kept = {
+            r.doc_id
+            for r in token_budget_select(
+                docs, {"en": 5}, default_budget=2
+            ).collect()
+        }
+        assert kept == {1, 2, 3}
+        # default 0 drops the NULL-lang doc; en keeps 3 then the free
+        # 0-token doc 2
+        kept = {
+            r.doc_id
+            for r in token_budget_select(
+                docs, {"en": 5}, default_budget=0
+            ).collect()
+        }
+        assert kept == {2, 3}
 
 
 from streetview_naturevisibility_spark.operators.textops import chunk_dedup

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from streetview_naturevisibility_spark.operators import dedup, similarity, textops
+from tests.oracle import oracle_minhash
 
 SF = "/root/testdata/sf0.001"
 
@@ -611,17 +612,19 @@ class TestPairGenHybrid:
 
 class TestMinhashKernelParity:
     """r7 vectorized signature fold: the Arrow kernel must be
-    bit-identical to the JVM aggregate it replaces."""
+    bit-identical to the plain fold restated in ``oracle_minhash``."""
 
     def test_kernel_equals_jvm_fold(self, spark, docs):
         sh = dedup.minhash_shingle_frame(docs, "text", "doc_id", 3, "tokenmix")
-        fast = dedup.minhash_signatures_from_shingles(sh, 32, "tokenmix")
-        slow = dedup.minhash_signatures_from_shingles(
-            sh, 32, "tokenmix", engine="jvm"
-        )
-        key = F.col("minhash").cast("string").alias("m")
-        assert fast.select("id", key).exceptAll(slow.select("id", key)).count() == 0
-        assert slow.select("id", key).exceptAll(fast.select("id", key)).count() == 0
+        got = {
+            r.id: r.minhash
+            for r in dedup.minhash_signatures_from_shingles(
+                sh, 32, "tokenmix"
+            ).collect()
+        }
+        want = {r.id: oracle_minhash(r.sh, 32) for r in sh.collect()}
+        assert got == want
+        assert len(got) > 0
 
     def test_kernel_null_and_empty_rows(self, spark):
         src = spark.createDataFrame(
@@ -634,11 +637,5 @@ class TestMinhashKernelParity:
                 src, 8, "tokenmix"
             ).collect()
         }
-        slow = {
-            r.id: r.minhash
-            for r in dedup.minhash_signatures_from_shingles(
-                src, 8, "tokenmix", engine="jvm"
-            ).collect()
-        }
-        assert fast == slow
+        assert fast == {r.id: oracle_minhash(r.sh, 8) for r in src.collect()}
         assert fast[2] is None and fast[3] == [1 << 33] * 8

@@ -470,6 +470,8 @@ def test_semantic_dedup_rejects_bad_keep(spark):
         semantic_dedup(_spark_emb(spark, _mk_emb()), pairs="bucket")
     with pytest.raises(ValueError, match="requires assign"):
         semantic_dedup(_spark_emb(spark, _mk_emb()), pairs="local")
+    with pytest.raises(ValueError, match="requires pairs"):
+        semantic_dedup(_spark_emb(spark, _mk_emb()), assign="udf")
 
 
 def _np_lloyd(vectors: np.ndarray, init: np.ndarray, iters: int) -> np.ndarray:
@@ -556,25 +558,8 @@ def test_semantic_dedup_accepts_fitted_centroids(spark):
     assert out[100].list_id == out[101].list_id
 
 
-@pytest.mark.parametrize("keep", ["closest", "farthest"])
-def test_semantic_dedup_local_pairs_matches_join(spark, keep):
-    """pairs='local' (per-cluster BLAS dominance) must agree with the
-    pair-join path on kept sets for both keep rules (margin-safe
-    fixture: BLAS vs fold dots differ only in the last ulp)."""
-    pdf = _mk_emb()
-    join_out = (
-        semantic_dedup(
-            _spark_emb(spark, pdf),
-            threshold=THR,
-            n_lists=NL,
-            dim=DIM,
-            keep=keep,
-            assign="udf",
-        )
-        .orderBy("vec_id")
-        .toPandas()
-    )
-    local_out = (
+def _local_semdedup(spark, pdf, keep="closest"):
+    return (
         semantic_dedup(
             _spark_emb(spark, pdf),
             threshold=THR,
@@ -587,41 +572,40 @@ def test_semantic_dedup_local_pairs_matches_join(spark, keep):
         .orderBy("vec_id")
         .toPandas()
     )
-    assert list(join_out["vec_id"]) == list(local_out["vec_id"])
-    assert list(join_out["kept"]) == list(local_out["kept"])
-    assert join_out["kept"].sum() < len(join_out)  # fixture has dups
+
+
+@pytest.mark.parametrize("keep", ["closest", "farthest"])
+def test_semantic_dedup_local_pairs_matches_join(spark, keep):
+    """pairs='local' (per-cluster BLAS dominance) must keep exactly the
+    set the pair-join SQL twin keeps, for both keep rules (margin-safe
+    fixture: BLAS vs fold dots differ only in the last ulp)."""
+    pdf = _mk_emb()
+    local_out = _local_semdedup(spark, pdf, keep)
+    want = duckdb_semantic_dedup(
+        pdf, threshold=THR, n_lists=NL, dim=DIM, seed=SEED, keep=keep
+    )
+    assert list(local_out["vec_id"]) == list(want["vec_id"])
+    assert list(local_out["kept"]) == list(want["kept"])
+    assert local_out["kept"].sum() < len(local_out)  # fixture has dups
 
 
 def test_semantic_dedup_udf_assignment_matches_column_path(spark):
     """assign='udf' (Arrow matmul — the large-n_lists scale path) must
-    agree with the literal-Column path on assignments, kept sets, and
-    centroid cosines (to FP tolerance; the matmul expands |v-c|^2 =
-    |v|^2 - 2v.c + |c|^2, a different but equivalent arithmetic),
-    including the NULL-embedding row."""
+    agree with the literal-Column semantics, restated by the DuckDB
+    twin, on assignments, kept sets, and centroid cosines (to FP
+    tolerance; the matmul expands |v-c|^2 = |v|^2 - 2v.c + |c|^2, a
+    different but equivalent arithmetic), including the NULL-embedding
+    row."""
     pdf = _mk_emb()
-    col = (
-        semantic_dedup(_spark_emb(spark, pdf), threshold=THR, n_lists=NL, dim=DIM)
-        .orderBy("vec_id")
-        .toPandas()
-    )
-    udf = (
-        semantic_dedup(
-            _spark_emb(spark, pdf),
-            threshold=THR,
-            n_lists=NL,
-            dim=DIM,
-            assign="udf",
-        )
-        .orderBy("vec_id")
-        .toPandas()
-    )
-    assert list(col["vec_id"]) == list(udf["vec_id"])
-    assert list(col["kept"]) == list(udf["kept"])
-    assert list(col["list_id"].astype("float64").fillna(-1)) == list(
+    udf = _local_semdedup(spark, pdf)
+    want = duckdb_semantic_dedup(pdf, threshold=THR, n_lists=NL, dim=DIM, seed=SEED)
+    assert list(want["vec_id"]) == list(udf["vec_id"])
+    assert list(want["kept"]) == list(udf["kept"])
+    assert list(want["list_id"].astype("float64").fillna(-1)) == list(
         udf["list_id"].astype("float64").fillna(-1)
     )
     np.testing.assert_allclose(
-        col["centroid_cos"].fillna(0.0).astype(float),
+        want["centroid_cos"].fillna(0.0).astype(float),
         udf["centroid_cos"].fillna(0.0).astype(float),
         atol=1e-9,
     )

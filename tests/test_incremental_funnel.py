@@ -181,6 +181,7 @@ def test_incremental_funnel_equals_batch_rerun(spark, ivf_index):
         dim=DIM,
         centroids=np.asarray(cents, dtype=np.float64),
         assign="udf",
+        pairs="local",
     )
     final_batch = all_text_ok.join(
         sd.where(F.col("kept")).select(F.col("vec_id").alias("doc_id")),

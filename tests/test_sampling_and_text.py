@@ -111,8 +111,7 @@ class TestSamplePoints:
 
 class TestDecontamination:
     """Benchmark-overlap decontamination: planted 13-gram contamination
-    must be found exactly — both the broadcast arrays_intersect path
-    and the explode+semi-join path — and clean docs must survive."""
+    must be found exactly and clean docs must survive."""
 
     def _corpus(self, spark):
         bench_gram = " ".join(f"b{i}" for i in range(13))
@@ -132,24 +131,24 @@ class TestDecontamination:
         )
         return docs, blocklist
 
-    def test_broadcast_and_join_methods_agree(self, spark):
+    def test_contaminated_ids_match_duckdb_twin(self, spark):
+        """The hit set is exactly the doc set the string-shingle SQL
+        twin drops: both planted docs."""
         from streetview_naturevisibility_spark.operators.textops import (
             contaminated_ids,
         )
+        from tests.oracle import duckdb_decontaminate
 
         docs, blk = self._corpus(spark)
-        a = sorted(
-            (r.doc_id, r.n_hits)
-            for r in contaminated_ids(docs, blk, block_text_col="text",
-                                      method="broadcast").collect()
+        hits = sorted(
+            r.doc_id
+            for r in contaminated_ids(docs, blk, block_text_col="text").collect()
         )
-        b = sorted(
-            (r.doc_id, r.n_hits)
-            for r in contaminated_ids(docs, blk, block_text_col="text",
-                                      method="join").collect()
+        docs_pd = docs.toPandas()
+        kept = duckdb_decontaminate(
+            docs_pd, blk.toPandas().rename(columns={"bid": "doc_id"})
         )
-        assert a == b
-        assert [i for i, _ in a] == [2, 4]
+        assert hits == sorted(set(docs_pd["doc_id"]) - set(kept["doc_id"])) == [2, 4]
 
     def test_decontaminate_drops_only_hits(self, spark):
         from streetview_naturevisibility_spark.operators.textops import decontaminate
@@ -185,14 +184,11 @@ class TestDecontamination:
         from tests.oracle import duckdb_decontaminate
 
         docs, blk = self._corpus(spark)
-        for method in ("join", "broadcast"):
-            got = sorted(
-                r.doc_id for r in decontaminate(docs, blk, method=method).collect()
-            )
-            want = duckdb_decontaminate(
-                docs.toPandas(), blk.toPandas().rename(columns={"bid": "doc_id"})
-            )
-            assert got == sorted(want["doc_id"].tolist())
+        got = sorted(r.doc_id for r in decontaminate(docs, blk).collect())
+        want = duckdb_decontaminate(
+            docs.toPandas(), blk.toPandas().rename(columns={"bid": "doc_id"})
+        )
+        assert got == sorted(want["doc_id"].tolist())
 
         # wider corpus: 120 docs, tokens from a small alphabet so real
         # overlaps occur; blocklist = 5 of the docs verbatim

@@ -217,6 +217,40 @@ def test_bpe_spark_encode_and_count(spark):
         assert cnt[did] == want, did
 
 
+def test_bpe_count_memo_bounded_on_insert(monkeypatch):
+    """The cross-task subword-count memo stays within its cap while one
+    text inserts more distinct words than the cap allows, and counts
+    stay exact across the clears."""
+    from streetview_naturevisibility_spark.operators import tokenize
+
+    class Tracked(dict):
+        peak = 0
+
+        def __setitem__(self, k, v):
+            super().__setitem__(k, v)
+            Tracked.peak = max(Tracked.peak, len(self))
+
+    monkeypatch.setattr(tokenize, "_COUNT_CACHE_CAP", 3)
+    merges = train_bpe({"low": 5, "lower": 2, "newest": 6, "widest": 3}, 8)
+    ranks = {p: i for i, p in enumerate(merges)}
+    text = " ".join(f"w{i} low{i}" for i in range(12)) + " low lower newest"
+    cache = Tracked()
+    got = tokenize._memo_subword_count(text, ranks, cache)
+    assert got == len(encode_text(text, ranks))
+    assert 0 < Tracked.peak <= 3
+    assert tokenize._memo_subword_count(None, ranks, cache) == 0
+
+
+def test_bpe_count_memo_key_is_merge_digest():
+    from streetview_naturevisibility_spark.operators import tokenize
+
+    a = [("l", "o"), ("lo", "w</w>")]
+    b = [("l", "o"), ("lo", "w")]
+    assert tokenize._merges_digest(a) == tokenize._merges_digest(list(a))
+    assert tokenize._merges_digest(a) != tokenize._merges_digest(b)
+    assert len(tokenize._merges_digest(a)) == 64  # sha256 hex
+
+
 def test_bpe_spark_train_matches_local_counter(spark):
     rows = [(i, f"alpha beta gamma w{i % 3}") for i in range(40)]
     df = spark.createDataFrame(rows, "doc_id: long, text: string")
