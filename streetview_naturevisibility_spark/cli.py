@@ -52,7 +52,7 @@ from .operators.resume import read_lineage, run_stage
 from .operators.sampling import sample_points
 from .operators.tiling import prepare_pages
 from .operators.zonal import zonal_mean
-from .session import get_spark
+from .session import get_spark, materialize
 
 
 def cmd_pipeline(args: argparse.Namespace) -> None:
@@ -104,7 +104,8 @@ def cmd_metrics(args: argparse.Namespace) -> None:
     roads = spark.read.parquet(args.roads)
     points = spark.read.parquet(os.path.join(args.results, "_ckpt", "sample_points", "data"))
     gvi = spark.read.parquet(os.path.join(args.results, "gvi_points"))
-    inter = build_intersection(gvi, points, roads).cache()
+    # read by all six metrics below
+    inter = materialize(build_intersection(gvi, points, roads))
 
     print("gvi-streets (per-road):")
     roads_with_avg_gvi(roads, gvi_per_road(inter)).orderBy("road_id").show(20)
@@ -268,7 +269,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         # classifier, dedup digests) judges the repaired text
         from .operators.textops import fix_text
 
-        fx = fix_text(docs).localCheckpoint(eager=True)
+        fx = materialize(fix_text(docs))
         n_fixed = fx.where("changed").count()
         docs = docs.drop("text").join(
             fx.select("doc_id", F.col("text_fixed").alias("text")), "doc_id"
@@ -281,11 +282,13 @@ def cmd_curate(args: argparse.Namespace) -> None:
         # digests) judge the line-cleaned text
         from .operators.textops import c4_clean
 
-        cc = c4_clean(
-            docs,
-            min_words_per_line=getattr(args, "c4_min_words", 3),
-            min_sentences=getattr(args, "c4_min_sentences", 5),
-        ).localCheckpoint(eager=True)
+        cc = materialize(
+            c4_clean(
+                docs,
+                min_words_per_line=getattr(args, "c4_min_words", 3),
+                min_sentences=getattr(args, "c4_min_sentences", 5),
+            )
+        )
         st = cc.agg(
             F.sum(F.col("keep").cast("long")).alias("kept"),
             F.sum("n_lines").alias("nl"),
@@ -308,9 +311,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
 
         blk = spark.read.parquet(args.blocklist)
         n_before = n_in
-        docs = decontaminate(docs, blk, n=args.decontam_n).localCheckpoint(
-            eager=True
-        )
+        docs = materialize(decontaminate(docs, blk, n=args.decontam_n))
         n_in = docs.count()
         print(
             f"[decontam] dropped={n_before - n_in} "
@@ -318,9 +319,9 @@ def cmd_curate(args: argparse.Namespace) -> None:
         )
 
     def swap_in_deduped(docs, stage_out, tag: str, what: str):
-        """Checkpoint a text-rewrite stage's output once, print its
+        """Materialize a text-rewrite stage's output once, print its
         removal count, and swap its ``text_deduped`` in for ``text``."""
-        stage_out = stage_out.localCheckpoint(eager=True)
+        stage_out = materialize(stage_out)
         n_removed = stage_out.agg(F.sum("n_removed")).collect()[0][0] or 0
         print(f"[{tag}] removed={n_removed} {what}")
         return docs.drop("text").join(
@@ -395,10 +396,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         # downstream stage otherwise replans the full fix/para/chunk
         # expression tree and the composed plan grows multiplicatively
         # (an all-stages run OOMed a 4g driver on PLAN size, not data).
-        # This is the pruned-projection checkpoint strategy
-        # BENCH/BASELINE.md documents — on a cluster use checkpoint()
-        # to reliable storage.
-        docs = docs.localCheckpoint(eager=False)
+        docs = materialize(docs)
 
     scored = analyze_documents(docs, keep_input_cols=True)
     kept_q = scored.where(F.col("quality_score") >= F.lit(args.min_quality))

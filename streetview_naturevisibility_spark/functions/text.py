@@ -92,10 +92,10 @@ def _token_byte_matrix(tokens: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """(n_tokens, width) uint8 matrix (zero-padded) + exact per-token
     byte lengths. Liveness during the hash sweep is ``position <
     length``, NOT ``byte != 0`` — hostile web text can contain embedded
-    NUL bytes, and those must hash identically to the scalar twin
-    (``hash_str64``). NumPy's 'S' dtype strips TRAILING NULs, so the
-    width is forced to cover the true max length; the stripped trailing
-    positions read back as 0x00 — exactly the byte FNV must consume."""
+    NUL bytes, and those must hash as bytes like any other. NumPy's 'S'
+    dtype strips TRAILING NULs, so the width is forced to cover the true
+    max length; the stripped trailing positions read back as 0x00 —
+    exactly the byte FNV must consume."""
     if len(tokens) == 0:
         return np.zeros((0, 1), dtype=np.uint8), np.zeros(0, dtype=np.int64)
     lengths = np.fromiter((len(t) for t in tokens), dtype=np.int64, count=len(tokens))

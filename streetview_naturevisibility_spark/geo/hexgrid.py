@@ -13,9 +13,9 @@ planar meter space with the same *semantics* H3 gives a pipeline:
   approximate containment exactly like H3's aperture-7 parents),
 - a packed 64-bit cell id usable as a shuffle/partition key.
 
-If ``h3`` IS importable, ``latlng_to_h3_udf`` wraps the genuine
+A deployment with the real ``h3`` library would wrap
 ``h3.latlng_to_cell`` in a vectorized pandas UDF with the same column
-contract, so a real deployment swaps libraries without a plan change.
+contract as ``make_hex_cell_udf``, without a plan change.
 
 Geometry (pointy-top, circumradius ``size`` meters):
   axial q = (sqrt(3)/3 * x - 1/3 * y) / size
@@ -108,23 +108,6 @@ def make_hex_cell_udf(size: float):
         return pd.Series(hex_cell_np(x.to_numpy(), y.to_numpy(), size))
 
     return hex_cell
-
-
-def latlng_to_h3_udf(res: int):
-    """Genuine H3 wrapper, used only when the library exists (absent in
-    this container — the pure-math grid above is the tested path)."""
-    try:
-        import h3
-    except ImportError as exc:  # pragma: no cover - env without h3
-        raise ImportError("h3 not installed; use make_hex_cell_udf") from exc
-
-    @F.pandas_udf(LongType())
-    def to_cell(lat: pd.Series, lng: pd.Series) -> pd.Series:  # pragma: no cover
-        return pd.Series(
-            [h3.str_to_int(h3.latlng_to_cell(a, o, res)) for a, o in zip(lat, lng)]
-        )
-
-    return to_cell
 
 
 def hex_cell_sql_ctes(

@@ -36,6 +36,8 @@ from pyspark.sql import functions as F
 
 _H2_SALT = 0x5BD1E995  # second-hash salt column (any fixed literal)
 _SLICE = 4 << 20  # bitmap shard size for the build shuffle (bytes)
+# residual="auto" broadcasts the Bloom-positive digests up to this count
+_BROADCAST_MAX_CANDIDATES = 2_000_000
 
 
 def bloom_params(capacity: int, fpp: float = 0.01) -> tuple[int, int]:
@@ -191,7 +193,6 @@ def bloom_anti_join(
     col: str,
     bloom: dict,
     residual: str = "auto",
-    broadcast_max_candidates: int = 2_000_000,
 ) -> DataFrame:
     """EXACT ``batch LEFT ANTI JOIN done ON col`` where only the
     Bloom-positive slice (true members + ~fpp false positives) enters
@@ -213,16 +214,15 @@ def bloom_anti_join(
       incremental-funnel steady state, where the filter is also built
       once and amortized across batches).
     - ``"auto"``: count the candidates with a dedicated probe pass
-      (map-only — deliberately NOT persisted: a persist inside a
-      lazy operator has no unpersist point, the two-phase kNN
-      lifecycle lesson), take ``"broadcast"`` iff they fit
-      ``broadcast_max_candidates``.
+      (map-only, deliberately not materialized so the operator stays
+      lazy), take ``"broadcast"`` iff they fit
+      ``_BROADCAST_MAX_CANDIDATES``.
     """
     probed = bloom_probe_col(batch, col, bloom)
     if residual == "auto":
         n_cand = probed.where(F.col("_maybe_member")).count()
         residual = (
-            "broadcast" if n_cand <= broadcast_max_candidates else "join"
+            "broadcast" if n_cand <= _BROADCAST_MAX_CANDIDATES else "join"
         )
     elif residual not in ("join", "broadcast"):
         raise ValueError(f"unknown residual {residual!r}")

@@ -39,17 +39,22 @@ from pyspark.sql.types import (
 )
 
 from streetview_naturevisibility_spark.operators.dedup import shingles_col
+from streetview_naturevisibility_spark.session import materialize
 
 
 # ------------------------------------------------------------------
 # connected components over near-dup pairs
 # ------------------------------------------------------------------
+# edge sets up to this many rows are closed by a driver-side union-find
+_DRIVER_MAX_EDGES = 2_000_000
+
+
 def _cc_star(edges: DataFrame, max_iters: int) -> DataFrame:
     """Alternating large-star/small-star connected components (Kiveris
     et al., "Connected Components in MapReduce and Beyond"): O(log^2 n)
     rounds regardless of component diameter. Each round is two
-    neighborhood-min passes (groupBy + join); the edge frame is eagerly
-    localCheckpoint-ed per round (bounded lineage, cleaner-reclaimed).
+    neighborhood-min passes (groupBy + join); the edge frame is
+    materialized per round (bounded lineage).
     Converges when the edge set is a stable star forest: every node
     linked directly to its component minimum. Returns (id, lbl)."""
 
@@ -76,11 +81,10 @@ def _cc_star(edges: DataFrame, max_iters: int) -> DataFrame:
             .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
         )
         # symmetric closure for the next neighborhood pass
-        e2 = (
+        e2 = materialize(
             large.union(large.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
             .where(F.col("src") != F.col("dst"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         # small-star: orient edges to (big, small); link every small
         # neighbor (and the center) to the minimum
@@ -97,11 +101,10 @@ def _cc_star(edges: DataFrame, max_iters: int) -> DataFrame:
             .select(F.col("v").alias("src"), F.col("m").alias("dst"))
             .distinct()
         )
-        edges_next = (
+        edges_next = materialize(
             small.union(small.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
             .where(F.col("src") != F.col("dst"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         # stable star forest: every edge already points at the root
         # (src>dst side equals its own min) — detected when the edge
@@ -137,7 +140,6 @@ def duplicate_clusters(
     id_b: str = "id_b",
     max_iters: int = 25,
     algorithm: str = "propagation",
-    driver_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """Connected components over an undirected pair list -> one row per
     member node: (doc_id, cluster_id, cluster_size), where cluster_id
@@ -149,24 +151,22 @@ def duplicate_clusters(
       Each round is one shuffle join (edges x labels on src) plus a
       groupBy(dst) min — the label frame is node-sized (#docs that
       appear in any pair, far smaller than the corpus), and each
-      round's result is eagerly ``localCheckpoint``-ed so the lineage
-      never grows and superseded round results are released by the
-      context cleaner (no persist leak). Convergence = zero changed
-      labels (one tiny aggregate per round). Rounds needed = component
-      DIAMETER — right for dedup graphs, whose clusters are
-      near-cliques (diameter 2-4 at any corpus size).
+      round's result is materialized so the lineage never grows.
+      Convergence = zero changed labels (one tiny aggregate per
+      round). Rounds needed = component DIAMETER — right for dedup
+      graphs, whose clusters are near-cliques (diameter 2-4 at any
+      corpus size).
     - ``"star"``: alternating large-star/small-star (Kiveris et al.,
       "Connected Components in MapReduce and Beyond") — O(log^2 n)
       rounds regardless of diameter; use for adversarial/chain-shaped
       graphs (e.g. transitive similarity chains) where propagation
       would loop diameter times.
 
-    The pair input is materialized ONCE (eager localCheckpoint): the
-    upstream LSH pipeline is the expensive part and must not re-run
-    per round.
+    The pair input is materialized ONCE: the upstream LSH pipeline is
+    the expensive part and must not re-run per round.
 
-    r7 adaptive path: when the (checkpointed) edge set is small —
-    ``driver_max_edges`` rows, the broadcast-threshold idea applied to
+    Adaptive path: when the (materialized) edge set is small —
+    ``_DRIVER_MAX_EDGES`` rows, the broadcast-threshold idea applied to
     CC — the components are closed with a driver-side union-find on
     the collected edges (bounded collect, the kmeans_fit precedent)
     instead of 3-5 distributed rounds of join+aggregate+checkpoint
@@ -174,10 +174,9 @@ def duplicate_clusters(
     ids only — string ids keep the distributed path so byte-wise vs
     codepoint min ordering can never diverge). Dedup graphs are pair-
     member-sized, far smaller than the corpus, so real funnels at any
-    corpus scale usually take this path; pass ``driver_max_edges=0``
-    to force the distributed rounds.
+    corpus scale usually take this path.
     """
-    edges = (
+    edges = materialize(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         # self-pairs carry no connectivity; drop them at entry so both
@@ -185,11 +184,10 @@ def duplicate_clusters(
         # itself is not clustered)
         .where(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     src_type = edges.schema["src"].dataType
     integral = isinstance(src_type, (ByteType, ShortType, IntegerType, LongType))
-    if driver_max_edges and integral and edges.count() <= int(driver_max_edges):
+    if integral and edges.count() <= _DRIVER_MAX_EDGES:
         import pandas as pd
         from pyspark.sql.types import StructField, StructType
 
@@ -239,11 +237,10 @@ def duplicate_clusters(
             F.col("lbl").alias("cluster_id"),
             "cluster_size",
         )
-    labels = (
+    labels = materialize(
         edges.select(F.col("src").alias("id"))
         .distinct()
         .select("id", F.col("id").alias("lbl"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(max_iters):
         msgs = (
@@ -251,16 +248,14 @@ def duplicate_clusters(
             .groupBy("dst")
             .agg(F.min("lbl").alias("nbr_min"))
         )
-        stepped = (
-            labels.join(msgs, labels.id == msgs.dst, "left")
-            .select(
+        stepped = materialize(
+            labels.join(msgs, labels.id == msgs.dst, "left").select(
                 "id",
                 F.least(F.col("lbl"), F.coalesce("nbr_min", "lbl")).alias("new_lbl"),
                 (F.coalesce("nbr_min", "lbl") < F.col("lbl")).cast("long").alias(
                     "chg"
                 ),
             )
-            .localCheckpoint(eager=True)
         )
         n_changed = stepped.agg(F.sum("chg")).first()[0] or 0
         labels = stepped.select("id", F.col("new_lbl").alias("lbl"))
@@ -670,15 +665,14 @@ def pack_assignments(
     # on 32 cores; results are identical for any span by construction)
     eff_span = max(1, int(bucket_span) // 8)
     # the (id, tokens, bucket) proxy is ~24 bytes/row — materialize it
-    # once (eager localCheckpoint) so the per-bucket totals pass and
-    # the window pass don't each re-evaluate the upstream lineage
-    # (guide §8: decide with small rows; compute happens at call time)
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.coalesce(tok.cast("long"), F.lit(0)).alias("_t"),
-    ).withColumn(
-        "_bk", F.floor(F.col("id") / F.lit(eff_span))
-    ).localCheckpoint(eager=True)
+    # so the per-bucket totals pass and the window pass don't each
+    # re-evaluate the upstream lineage (guide §8: decide with small rows)
+    base = materialize(
+        df.select(
+            F.col(id_col).alias("id"),
+            F.coalesce(tok.cast("long"), F.lit(0)).alias("_t"),
+        ).withColumn("_bk", F.floor(F.col("id") / F.lit(eff_span)))
+    )
     totals = base.groupBy("_bk").agg(F.sum("_t").alias("_bt"))
     w_tot = Window.orderBy("_bk").rowsBetween(Window.unboundedPreceding, -1)
     offsets = totals.withColumn(

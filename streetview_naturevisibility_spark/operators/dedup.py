@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from ..session import materialize
+
 # the permutation domain: (a*h + b) mod 2^32 with a odd is a bijection
 # of the 32-bit hash space. The modulus MUST be <= the hash range —
 # an earlier draft reduced mod (2^61 - 1), but a*h+b < 2^60 never
@@ -350,23 +352,14 @@ def minhash_lsh_pairs(
             "silently changes the (k, bands) probability curve"
         )
     rows = k // bands
-    # r7 restructure (guide §2.4 remove shuffles / §1.2 algorithm
-    # first): the upstream lineage used to be re-evaluated ~5x per
-    # action — the bucket self-join evaluates its subtree twice, the
-    # cap-size aggregate a third time, and the two verify joins
-    # re-shingled the whole corpus twice more. Now the per-doc shingle
-    # frame is materialized ONCE (eager localCheckpoint — raw row
-    # blocks, ContextCleaner-reclaimed) and shared by the signature
-    # stage AND the verify stage (tokenmix verifies over exactly the
-    # same hash arrays the signatures fold); the exploded band-bucket
-    # frame is materialized once more so the self-join + cap sizes
-    # read blocks instead of recomputing the k-permutation fold.
-    # Compute happens at CALL time (the knn_snap precedent).
-    from pyspark import StorageLevel
-
-    sh_frame = minhash_shingle_frame(
-        df, text_col, id_col, n, hash_method
-    ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    # The per-doc shingle frame is materialized once and shared by
+    # the signature stage AND the verify stage (tokenmix verifies over
+    # exactly the same hash arrays the signatures fold); otherwise the
+    # bucket self-join, the cap sizes and both verify joins would each
+    # re-shingle the corpus.
+    sh_frame = materialize(
+        minhash_shingle_frame(df, text_col, id_col, n, hash_method)
+    )
     sig = minhash_signatures_from_shingles(sh_frame, k, hash_method)
     band_cols = []
     for b in range(bands):
@@ -384,21 +377,21 @@ def minhash_lsh_pairs(
     ).select(
         "id", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh")
     )
-    # r7 candidate generation: ONE groupBy materializes each bucket's
-    # member list (replacing sizes-aggregate + cap join + self-join —
-    # three passes over the bucket frame and two extra Exchanges of
-    # it). Metrics, the cap filter and pair generation all read the
-    # checkpointed grouped frame. Pairs come from an in-row
+    # Candidate generation: ONE groupBy builds each bucket's member
+    # list, materialized because the metrics, the cap filter and both
+    # pair generators read it. Pairs come from an in-row
     # combination expansion for buckets up to _PAIR_GEN_MAX members
     # (the overwhelming majority — LSH buckets are near-dup groups);
     # larger eligible buckets fall back to the classic per-bucket
     # self-join, which streams the quadratic output instead of
     # materializing one giant in-row array. Same pair set either way
     # (sorted members, i<j), same metrics.
-    grouped = buckets.groupBy("band", "bh").agg(
-        F.count(F.lit(1)).alias("_bsz"),
-        F.collect_list("id").alias("_ids"),
-    ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    grouped = materialize(
+        buckets.groupBy("band", "bh").agg(
+            F.count(F.lit(1)).alias("_bsz"),
+            F.collect_list("id").alias("_ids"),
+        )
+    )
     over = (
         F.lit(False)
         if max_bucket is None
@@ -445,13 +438,12 @@ def minhash_lsh_pairs(
     )
     cand = pairs_small.union(pairs_big).distinct()
 
-    # Verify joins read the checkpointed shingle frame — no upstream
-    # re-evaluation, no second corpus-wide shingle pass. The candidate
+    # Verify joins read the materialized shingle frame. The candidate
     # set is materialized (it is consumed by both verify joins) and,
     # when small, broadcast into them so the shingle frame is never
     # shuffled (guide §3.1; a checkpointed frame carries no size
     # statistics, so Catalyst would otherwise pick a sort-merge join).
-    cand = cand.localCheckpoint(eager=True)
+    cand = materialize(cand)
     small_cand = cand.count() <= 5_000_000
     sh = sh_frame
     sh_a = sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a")
@@ -474,7 +466,7 @@ def fnv1a64_vec(tokens: np.ndarray) -> np.ndarray:
     """Vectorized FNV-1a 64-bit (masked column sweep over the padded
     token byte matrix — same trick as functions/text.fnv1a32). The mask
     is positional (byte index < token length), so tokens with embedded
-    NUL bytes hash identically to the scalar ``hash_str64`` twin."""
+    NUL bytes hash by their full byte string."""
     from ..functions.text import _token_byte_matrix
 
     mat, lengths = _token_byte_matrix(
@@ -511,14 +503,6 @@ def simhash_kernel(texts: pd.Series, bits: int = 64) -> pd.Series:
                 sig |= np.uint64(1) << np.uint64(j)
         out[i] = np.int64(sig.astype(np.int64))
     return pd.Series(out)
-
-
-def hash_str64(s: str) -> int:
-    """FNV-1a 64-bit (stable across processes, unlike Python hash())."""
-    h = 0xCBF29CE484222325
-    for byte in s.encode("utf-8"):
-        h = ((h ^ byte) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-    return h
 
 
 simhash_udf = F.pandas_udf(lambda s: simhash_kernel(s), LongType())

@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..geo.cells import neighbor_cells_col
+from ..session import materialize
 
 
 def knn_snap(
@@ -123,7 +124,7 @@ def _snap_reduce_join(
     pages: DataFrame,
     key_col: str,
     reduce: str,
-    materialize: bool,
+    eager: bool,
 ) -> DataFrame:
     """Shared k=1 reduce + miss-preserving join-back (used by the
     square-cell and hex-cell snap joins)."""
@@ -149,31 +150,18 @@ def _snap_reduce_join(
         # candidate set adds a constant job boundary — callers with
         # provably sparse candidates may pass reduce="sort_exact".
         #
-        # Lifecycle: the candidate set is persisted so the pages scan
-        # runs exactly once across the two phases, the (small, winners-
-        # only) ``best`` frame is eagerly localCheckpoint-ed to cut the
-        # lineage back to cand, and cand is unpersisted BEFORE this
-        # function returns — repeated snaps in one long-lived session
-        # leave the CacheManager empty (pytest-asserted in
-        # tests/test_knn.py), no call-site clearCache() convention
-        # needed. The checkpointed winners (<= one row per point) are
-        # reclaimed by Spark's ContextCleaner when the returned
-        # DataFrame is dropped. Note this makes the snap compute at
-        # CALL time rather than first-action time.
-        # materialize=False returns the fully LAZY two-phase plan (no
-        # persist, no checkpoint) — for plan inspection (EXPLAIN audit)
-        # or callers managing their own lifecycle; an action on it
-        # computes the candidate set twice (md + tie-break branches).
-        if materialize:
-            # r7: eager localCheckpoint instead of persist — raw row
-            # blocks, no columnar cache build (measured ~4x the block
-            # write elsewhere), nothing registered in the CacheManager,
-            # blocks reclaimed by the ContextCleaner when `best` (and
-            # with it this lineage) is dropped. Same one-scan
-            # guarantee: both reduce phases read the blocks, which stay
-            # at the default memory-first level (a DISK_ONLY level here
-            # cost snap_kernel_pages 0.881x).
-            cand = cand.localCheckpoint(eager=True)
+        # Lifecycle: the candidate set is materialized so the pages scan
+        # runs exactly once across the two phases, and the (small,
+        # winners-only) ``best`` frame is materialized to cut the
+        # lineage back to cand; nothing stays in the CacheManager
+        # (pytest-asserted in tests/test_knn.py). The snap therefore
+        # computes at CALL time rather than first-action time.
+        # materialize=False returns the fully LAZY two-phase plan — for
+        # plan inspection (EXPLAIN audit) or callers managing their own
+        # lifecycle; an action on it computes the candidate set twice
+        # (md + tie-break branches).
+        if eager:
+            cand = materialize(cand)
         md = cand.groupBy("point_id").agg(F.min("_dist").alias("_md"))
         best = (
             cand.join(F.broadcast(md), "point_id")
@@ -181,8 +169,8 @@ def _snap_reduce_join(
             .groupBy("point_id")
             .agg(F.min(best_struct).alias("best"))
         )
-        if materialize:
-            best = best.localCheckpoint(eager=True)
+        if eager:
+            best = materialize(best)
     else:
         best = cand.groupBy("point_id").agg(F.min(best_struct).alias("best"))
 

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
+from ..session import materialize
+
 
 def cosine_col(vec_col, query: list[float]):
     """cos(vec, query) as pure JVM expressions."""
@@ -711,29 +713,23 @@ def semantic_dedup(
     if assign == "udf":
         # The unit vectors travel as flat binary (one frombuffer per
         # cluster in the local pair kernel). The assignment frame is
-        # materialized ONCE as raw row blocks (localCheckpoint, not
-        # persist: the columnar cache build costs ~4x a block write for
-        # array columns) and every consumer (cap sizes, pair stage,
-        # output join) reads them; blocks are reclaimed by the
-        # ContextCleaner when the returned frame is dropped.
-        from pyspark import StorageLevel
-
+        # materialized because every consumer (cap sizes, pair stage,
+        # output join) reads it.
         idt = base.schema["id"].dataType.simpleString()
-        s = base.mapInPandas(
-            _assign_ccos_vnb_batches(centroids),
-            f"id {idt}, list_id int, ccos double, vnb binary",
-        ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        s = materialize(
+            base.mapInPandas(
+                _assign_ccos_vnb_batches(centroids),
+                f"id {idt}, list_id int, ccos double, vnb binary",
+            )
+        )
         capped, metrics = _cap_buckets(s, ["list_id"], max_cluster)
-        # the (small, dup-ids-only) frame is eagerly checkpointed so
-        # repeated consumer actions don't re-run the pair stage. Note
-        # this makes the dedup compute at CALL time. When the dup set
-        # is genuinely small (it is checkpointed, so the count is
+        # the (small, dup-ids-only) frame is materialized so repeated
+        # consumer actions don't re-run the pair stage. When the dup set
+        # is genuinely small (it is materialized, so the count is
         # free), broadcast it so the kept-flag attach never shuffles
         # the assignment frame — a checkpointed frame has
         # no size statistics, so Catalyst would otherwise sort-merge.
-        dominated = _local_cluster_dups(capped, threshold, keep).localCheckpoint(
-            eager=True
-        )
+        dominated = materialize(_local_cluster_dups(capped, threshold, keep))
         dup_flag = dominated.withColumn("_dup", F.lit(True))
         if dominated.count() <= 10_000_000:
             dup_flag = F.broadcast(dup_flag)
@@ -897,12 +893,9 @@ def semantic_dedup_incremental(
     with open(os.path.join(index_path, "_centroids.json")) as f:
         centroids = np.asarray(json.load(f), dtype=np.float64)
     ac = make_assign_ccos_udf(centroids)
-    # eager localCheckpoint, not persist: the batch (small side) is
-    # consumed three times (touched-cluster collect, cogroup, null
-    # rows) — checkpointing materializes the assignment ONCE and
-    # leaves nothing registered in the CacheManager (the knn r2
-    # lifecycle lesson); blocks reclaim with the returned frame.
-    batch = (
+    # the batch (small side) is materialized because it is consumed
+    # three times (touched-cluster collect, cogroup, null rows)
+    batch = materialize(
         new_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
         .withColumn("_ac", ac(F.col("v")))
         .select(
@@ -911,7 +904,6 @@ def semantic_dedup_incremental(
             F.col("_ac.ccos").alias("ccos"),
             F.col("_ac.vn").alias("vn"),
         )
-        .localCheckpoint(eager=True)
     )
     touched = [
         int(r.list_id)

@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from ..session import materialize
+
 # tiny pinned stopword lists — heuristic n-gram/stopword language ID
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "a", "in", "is", "it", "that", "for"],
@@ -1049,6 +1051,8 @@ def chunk_dedup_cdc(
 # domain — the standard data-selection stage next to quality filtering.
 # ------------------------------------------------------------------
 DSIR_BUCKETS = 10_000
+# dsir_score builds n_buckets-long driver frames and per-task vectors
+_DSIR_MAX_BUCKETS = 1 << 22
 
 
 def hashed_ngram_buckets_col(text_col: str, n_buckets: int = DSIR_BUCKETS):
@@ -1119,9 +1123,9 @@ def dsir_score(
     Scale shape (r7 rewrite — guide §2.3/§2.4 "shuffle keys, not
     payloads" + §3.1 broadcast): the per-bucket log-ratio depends only
     on the bucket id, so the whole weight table is ``n_buckets``
-    doubles. The corpus's bucket arrays are computed ONCE (persisted
+    doubles. The corpus's bucket arrays are computed ONCE (materialized
     across the raw-count pass and the scoring pass — the md5 feature
-    hashing is the dominant cost and previously ran twice), the
+    hashing is the dominant cost), the
     ``lw`` table is collected driver-side (bounded by ``n_buckets``,
     computed IN the JVM via ``F.log`` so every double is bit-identical
     to the former per-row expression) and shipped back as ONE array
@@ -1131,70 +1135,61 @@ def dsir_score(
     corpus side). Per-doc sum order is unchanged (array order — the
     old explode + partial hash agg summed in exactly that order), so
     results are bit-equal, not just round-6 equal. The bucket-array
-    frame is eagerly localCheckpoint-ed (raw row blocks, reclaimed by
-    the ContextCleaner when the returned frame is dropped) so both the
-    count pass and every consumer action read it without re-hashing;
-    compute happens at call time (the knn_snap precedent).
+    frame is materialized so both the count pass and every consumer
+    action read it without re-hashing.
+
+    ``n_buckets`` is capped at 2**22 (``ValueError`` before any Spark
+    job): the weight table is built as an ``n_buckets``-row frame on
+    the driver and the raw counts as one ``n_buckets``-long vector per
+    task. DSIR's published config is 10k buckets.
     """
+    nb = int(n_buckets)
+    if nb > _DSIR_MAX_BUCKETS:
+        raise ValueError(
+            f"n_buckets ({nb}) exceeds the cap {_DSIR_MAX_BUCKETS}: "
+            "the weight table and per-task counts are n_buckets long"
+        )
     spark = docs.sparkSession
-    bs_col = hashed_ngram_buckets_col(text_col, n_buckets)
-    if int(n_buckets) <= (1 << 31) - 1:
-        # buckets < n_buckets always fit int32: halve the materialized
-        # array and Arrow bytes (guide §2.3 narrower types)
-        bs_col = F.transform(bs_col, lambda b: b.cast("int"))
+    # buckets < n_buckets fit int32: halve the materialized array and
+    # Arrow bytes (guide §2.3 narrower types)
+    bs_col = F.transform(
+        hashed_ngram_buckets_col(text_col, nb), lambda b: b.cast("int")
+    )
     bs_frame = docs.where(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("id"), bs_col.alias("_bs")
     )
-    reuse_bs = raw is None
-    if reuse_bs:
-        # materialized ONCE as raw row blocks (localCheckpoint — the
-        # columnar .persist() cache build measured ~4x the block write
-        # for this array column); both the count pass and the scoring
-        # pass read it, so the md5 feature hashing runs once
-        from pyspark import StorageLevel
-
-        bs_frame = bs_frame.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.DISK_ONLY
-        )
+    if raw is None:
+        # both the count pass and the scoring pass read the bucket
+        # arrays, so the md5 feature hashing runs once
+        bs_frame = materialize(bs_frame)
         # vectorized partial counts (guide §4.2): one np.bincount per
-        # Arrow batch and ONE 10k-row partial per task instead of a
+        # Arrow batch and ONE nb-row partial per task instead of a
         # 79M-row Generate + per-row hash aggregate (measured 8.2 s ->
         # 2.3 s net at 1M docs x ~79 features). Exact integer counts —
-        # bit-identical to the explode + groupBy it replaces. Guarded
-        # to small bucket spaces (the count vector is materialized per
-        # task); DSIR's published config is 10k buckets.
-        if int(n_buckets) <= (1 << 22):
-            from typing import Iterator
+        # bit-identical to an explode + groupBy.
+        from typing import Iterator
 
-            nb = int(n_buckets)
+        def _bincount(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            acc = np.zeros(nb, dtype=np.int64)
+            seen = False
+            for pdf in it:
+                if len(pdf):
+                    seen = True
+                    flat = np.concatenate(
+                        [np.asarray(a, dtype=np.int64) for a in pdf["_bs"]]
+                    )
+                    if flat.size:
+                        acc += np.bincount(flat, minlength=nb)
+            if seen:
+                yield pd.DataFrame({"b": np.arange(nb), "c": acc})
 
-            def _bincount(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                acc = np.zeros(nb, dtype=np.int64)
-                seen = False
-                for pdf in it:
-                    if len(pdf):
-                        seen = True
-                        flat = np.concatenate(
-                            [np.asarray(a, dtype=np.int64) for a in pdf["_bs"]]
-                        )
-                        if flat.size:
-                            acc += np.bincount(flat, minlength=nb)
-                if seen:
-                    yield pd.DataFrame({"b": np.arange(nb), "c": acc})
-
-            cr = (
-                bs_frame.select("_bs")
-                .mapInPandas(_bincount, "b long, c long")
-                .groupBy("b")
-                .agg(F.sum("c").alias("c"))
-                .where(F.col("c") > 0)
-            )
-        else:
-            cr = (
-                bs_frame.select(F.explode("_bs").alias("b"))
-                .groupBy("b")
-                .agg(F.count(F.lit(1)).alias("c"))
-            )
+        cr = (
+            bs_frame.select("_bs")
+            .mapInPandas(_bincount, "b long, c long")
+            .groupBy("b")
+            .agg(F.sum("c").alias("c"))
+            .where(F.col("c") > 0)
+        )
     else:
         cr, _ = ngram_bucket_counts(raw, text_col, n_buckets)
     ct, _ = ngram_bucket_counts(target, text_col, n_buckets)
@@ -1204,7 +1199,6 @@ def dsir_score(
     ct_rows = {int(r.b): int(r.c) for r in ct.collect()}
     cr_rows = {int(r.b): int(r.c) for r in cr.collect()}
     tt, tr_ = sum(ct_rows.values()), sum(cr_rows.values())
-    nb = int(n_buckets)
     counts = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -1246,8 +1240,8 @@ def dsir_score(
             lambda s: s["lw"],
         ).alias("_lw")
     )
-    # scoring is a pure projection over the checkpointed bucket arrays
-    # — no further materialization needed (consumers read the blocks)
+    # scoring is a pure projection over the bucket arrays — no further
+    # materialization needed
     return bs_frame.crossJoin(F.broadcast(lw_one_row)).select(
         F.col("id").alias(id_col),
         F.round(

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -79,3 +79,31 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Compute ``df`` now and return a frame that reads the result back.
+
+    The one place the engine goes eager: every operator that reuses a
+    frame (two reads of one candidate set, an iterative round, a cli
+    stage read by several later stages) calls this, and nothing else
+    picks a method or a storage level. It is an eager
+    ``df.localCheckpoint()`` at Spark's default level, because:
+
+    - it writes raw row blocks; a columnar ``persist()``/``cache()``
+      build measured about 4x the block write for array columns;
+    - nothing is registered in the CacheManager, so no caller needs an
+      ``unpersist``/``clearCache`` convention;
+    - the blocks are reclaimed by the ContextCleaner once the returned
+      frame (and with it this lineage) is garbage collected;
+    - the work happens at call time, not at the first action downstream,
+      and the returned plan's lineage stops here;
+    - the level is memory-first, spilling to disk: ``DISK_ONLY`` on the
+      knn candidate frame cost the 8M-page snap 0.881x.
+
+    The blocks live on the executors that wrote them, so a frame is not
+    reliable when an executor is lost (dynamic allocation on a
+    cluster). A reliable ``checkpoint()`` policy belongs here, in this
+    one function, when a workload needs it.
+    """
+    return df.localCheckpoint(eager=True)

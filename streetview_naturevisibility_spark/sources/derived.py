@@ -326,7 +326,7 @@ def spark_gvi(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sort_exact here, deliberately: at contract/bench scale the
         # distance filter leaves a sparse candidate set, so the
         # min(struct) SortAggregate is cheap while two_phase pays a
-        # constant ~2-3 s for its persist job boundary (measured r2:
+        # constant ~2-3 s for its materialization (measured r2:
         # 2.9 s vs 6.2 s at sf0.1; 1.7 s vs 3.4 s at 8M pages). The
         # flagship pipeline keeps the two_phase default for dense-cell
         # scale safety (hash partial agg bounds hot-cell memory).

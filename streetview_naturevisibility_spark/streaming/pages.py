@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.knn import knn_snap
+from ..session import materialize
 
 _COLS = ["point_id", "page_url", "snap_distance", "is_panoramic"]
 
@@ -117,14 +118,13 @@ def stream_snap_pages(
 ) -> None:
     """Stream new page files, fold each micro-batch into the snap state."""
     schema = spark.read.parquet(pages_dir).schema
-    points = points.cache()
+    # every micro-batch snaps against the same points
+    points = materialize(points)
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        # sort_exact: a perf choice, not a lifecycle requirement —
-        # two_phase now unpersists its candidate set before returning
-        # (knn.py), but it still pays an eager materialization per
-        # call; micro-batches are small and sparse, so the single-pass
-        # SortAggregate is the right trade here.
+        # sort_exact: a perf choice — two_phase pays an eager
+        # materialization per call; micro-batches are small and sparse,
+        # so the single-pass SortAggregate is the right trade here.
         snapped = knn_snap(
             points, batch, max_distance=max_distance, zoom=zoom, reduce="sort_exact"
         )

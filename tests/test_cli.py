@@ -65,11 +65,15 @@ class TestCli:
         )
         assert before == after
 
-    def test_metrics(self, fixture_dir, outdir, capsys):
+    def test_metrics(self, spark, fixture_dir, outdir, capsys):
+        cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+        spark.catalog.clearCache()
         cli.cmd_metrics(_ns(roads=os.path.join(fixture_dir, "roads.parquet"), results=outdir))
         text = capsys.readouterr().out
         assert "availability score" in text
         assert "top-5 highway types" in text
+        # the shared intersection frame leaves nothing in the CacheManager
+        assert cache_mgr.isEmpty(), "cmd_metrics leaked a CacheManager entry"
 
     def test_gap_fill_prints_model_selection(self, spark, fixture_dir, outdir, capsys):
         cli.cmd_gap_fill(

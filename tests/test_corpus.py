@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from streetview_naturevisibility_spark.operators import corpus
 from streetview_naturevisibility_spark.operators.corpus import (
     dedup_keep_canonical,
     duplicate_clusters,
@@ -18,6 +19,13 @@ from streetview_naturevisibility_spark.operators.corpus import (
 )
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+@pytest.fixture
+def distributed_cc(monkeypatch):
+    """Close every edge set with the distributed rounds: small test
+    graphs otherwise take the driver-side union-find."""
+    monkeypatch.setattr(corpus, "_DRIVER_MAX_EDGES", 0)
 
 
 # ------------------------------------------------------------------
@@ -85,6 +93,7 @@ def test_clusters_random_graph(spark):
 
 
 def _check_star(spark, pairs: list[tuple[int, int]]):
+    assert corpus._DRIVER_MAX_EDGES == 0, "star must run distributed"
     pdf = spark.createDataFrame(pairs, "id_a: long, id_b: long")
     got = {
         r.doc_id: (r.cluster_id, r.cluster_size)
@@ -97,22 +106,22 @@ def _check_star(spark, pairs: list[tuple[int, int]]):
     assert got == {x: (m, sizes[m]) for x, m in want.items()}
 
 
-def test_star_basic_and_pair(spark):
+def test_star_basic_and_pair(spark, distributed_cc):
     _check_star(spark, [(1, 2), (2, 3), (1, 3), (10, 11)])
 
 
-def test_star_long_chain(spark):
+def test_star_long_chain(spark, distributed_cc):
     # the adversarial shape star exists for: O(log^2 n) rounds vs the
     # propagation algorithm's O(diameter)
     _check_star(spark, [(i, i + 1) for i in range(40)])
 
 
-def test_star_interior_minimum(spark):
+def test_star_interior_minimum(spark, distributed_cc):
     # component minimum is an interior node, not an endpoint
     _check_star(spark, [(5, 9), (9, 2), (7, 9), (30, 31), (31, 28)])
 
 
-def test_star_random_graph_matches_propagation(spark):
+def test_star_random_graph_matches_propagation(spark, distributed_cc):
     rng = np.random.RandomState(13)
     pairs = [
         (int(a), int(b))
@@ -125,7 +134,7 @@ def test_star_random_graph_matches_propagation(spark):
     assert a == b
 
 
-def test_self_pairs_and_duplicates_ignored_consistently(spark):
+def test_self_pairs_and_duplicates_ignored_consistently(spark, distributed_cc):
     # self-pairs and repeated pairs must not change clustering, and
     # both algorithms must agree (a doc paired only with itself is
     # not clustered)
@@ -308,22 +317,22 @@ def test_quantile_rollup_sketch_bounds(spark):
             assert lo - 1 <= approx <= hi + 1, (p, exact, approx, lo, hi)
 
 
-def test_clusters_nonconvergence_raises(spark):
+def test_clusters_nonconvergence_raises(spark, distributed_cc):
     # wrong clusters are worse than no clusters: exhausting max_iters
     # without a fixpoint must raise, not return partial merges
-    # (driver_max_edges=0 forces the distributed rounds — the r7
-    # driver union-find needs no iteration and converges exactly)
+    # (distributed_cc forces the distributed rounds — the driver
+    # union-find needs no iteration and converges exactly)
     pairs = [(i, i + 1) for i in range(12)]
     pdf = spark.createDataFrame(pairs, "id_a: long, id_b: long")
     with pytest.raises(ValueError, match="did not converge"):
-        duplicate_clusters(pdf, max_iters=3, driver_max_edges=0)
+        duplicate_clusters(pdf, max_iters=3)
 
 
 class TestDriverUnionFind:
-    """r7 adaptive CC: driver union-find (small edge sets) must equal
+    """Adaptive CC: driver union-find (small edge sets) must equal
     the distributed propagation rounds exactly."""
 
-    def test_driver_path_equals_distributed(self, spark):
+    def test_driver_path_equals_distributed(self, spark, monkeypatch):
         import pandas as pd
 
         from streetview_naturevisibility_spark.operators.corpus import (
@@ -337,7 +346,8 @@ class TestDriverUnionFind:
             "id_a long, id_b long",
         )
         fast = duplicate_clusters(pairs).toPandas()
-        slow = duplicate_clusters(pairs, driver_max_edges=0).toPandas()
+        monkeypatch.setattr(corpus, "_DRIVER_MAX_EDGES", 0)
+        slow = duplicate_clusters(pairs).toPandas()
         key = ["doc_id", "cluster_id", "cluster_size"]
         a = fast[key].sort_values(key).reset_index(drop=True)
         b = slow[key].sort_values(key).reset_index(drop=True)

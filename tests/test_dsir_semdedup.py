@@ -122,6 +122,21 @@ def test_dsir_score_matches_counter_oracle(spark):
     assert exp[100][1] == 1
 
 
+def test_dsir_score_rejects_oversized_bucket_space_before_any_job(spark):
+    """n_buckets past 2**22 would build an n_buckets-row driver frame
+    and per-task count vectors: rejected at entry, no Spark job run."""
+    docs = spark.createDataFrame(_mk_docs())
+    target = spark.createDataFrame(_mk_target())
+    sc = spark.sparkContext
+    sc.setJobGroup("dsir-bucket-cap", "dsir n_buckets cap")
+    try:
+        with pytest.raises(ValueError, match="n_buckets"):
+            dsir_score(docs, target, n_buckets=(1 << 22) + 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("dsir-bucket-cap") == []
+
+
 def test_dsir_in_domain_scores_higher(spark):
     docs, target = _mk_docs(), _mk_target()
     got = dsir_score(

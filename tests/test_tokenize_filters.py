@@ -14,6 +14,7 @@ from streetview_naturevisibility_spark.functions.bpe import (
     pretokenize,
     train_bpe,
 )
+from streetview_naturevisibility_spark.operators import bloom as bloom_mod
 from streetview_naturevisibility_spark.operators.bloom import (
     bloom_anti_join,
     bloom_params,
@@ -317,6 +318,32 @@ def test_bloom_anti_join_exact(spark):
         )
         assert list(got.doc_id) == list(want.doc_id), residual
         assert list(got.key) == list(want.key), residual
+
+
+@pytest.mark.parametrize("cap, side", [(2_000_000, "broadcast"), (0, "join")])
+def test_bloom_anti_join_auto_picks_side_by_candidate_count(
+    spark, monkeypatch, cap, side
+):
+    """residual="auto" broadcasts the candidate digests up to the cap
+    and falls back to the plain anti-join past it; both exact."""
+    monkeypatch.setattr(bloom_mod, "_BROADCAST_MAX_CANDIDATES", cap)
+    batch = spark.range(0, 1000).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("k"), F.col("id") % 400).alias("key"),
+    )
+    done = spark.range(0, 200).select(
+        F.concat(F.lit("k"), F.col("id")).alias("key")
+    )
+    bloom = build_bloom(done, "key", capacity=200, fpp=0.01)
+    out = bloom_anti_join(batch, done, "key", bloom, residual="auto")
+    # the "join" side is a certain-miss/survivor Union; "broadcast"
+    # is one anti-join over the untouched batch
+    took_join = "Union" in out._jdf.queryExecution().logical().toString()
+    assert took_join == (side == "join")
+    want = batch.join(done, "key", "left_anti").orderBy("doc_id").toPandas()
+    got = out.orderBy("doc_id").toPandas()
+    assert list(got.doc_id) == list(want.doc_id)
+    assert list(got.key) == list(want.key)
 
 
 def test_bloom_build_many_partitions_and_nulls(spark):
