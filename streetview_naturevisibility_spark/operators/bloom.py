@@ -34,10 +34,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import fits, materialize
+
 _H2_SALT = 0x5BD1E995  # second-hash salt column (any fixed literal)
 _SLICE = 4 << 20  # bitmap shard size for the build shuffle (bytes)
-# residual="auto" broadcasts the Bloom-positive digests up to this count
-_BROADCAST_MAX_CANDIDATES = 2_000_000
 
 
 def bloom_params(capacity: int, fpp: float = 0.01) -> tuple[int, int]:
@@ -213,19 +213,20 @@ def bloom_anti_join(
       broadcast size and the per-batch overlap is small (the
       incremental-funnel steady state, where the filter is also built
       once and amortized across batches).
-    - ``"auto"``: count the candidates with a dedicated probe pass
-      (map-only, deliberately not materialized so the operator stays
-      lazy), take ``"broadcast"`` iff they fit
-      ``_BROADCAST_MAX_CANDIDATES``.
+    - ``"auto"``: materialize the distinct candidate digests (one
+      probe pass, run at call time) and take ``"broadcast"`` iff they
+      fit the session byte budget (``session.fits``); the broadcast
+      shape then reuses those digests instead of probing again.
     """
-    probed = bloom_probe_col(batch, col, bloom)
-    if residual == "auto":
-        n_cand = probed.where(F.col("_maybe_member")).count()
-        residual = (
-            "broadcast" if n_cand <= _BROADCAST_MAX_CANDIDATES else "join"
-        )
-    elif residual not in ("join", "broadcast"):
+    if residual not in ("auto", "join", "broadcast"):
         raise ValueError(f"unknown residual {residual!r}")
+    probed = bloom_probe_col(batch, col, bloom)
+    cand_keys = (
+        probed.where(F.col("_maybe_member")).select(F.col(col)).distinct()
+    )
+    if residual == "auto":
+        cand_keys = materialize(cand_keys)
+        residual = "broadcast" if fits(cand_keys) else "join"
     if residual == "broadcast":
         # single-probe shape: the batch is NEVER split (a
         # certain-miss/candidate union re-executes the probe once per
@@ -234,9 +235,6 @@ def bloom_anti_join(
         # the done set into the (candidate-bounded) match set; one
         # broadcast anti over the UNTOUCHED batch finishes. The done
         # set is scanned once, shuffled never.
-        cand_keys = (
-            probed.where(F.col("_maybe_member")).select(F.col(col)).distinct()
-        )
         matches = (
             done.select(F.col(col))
             .join(F.broadcast(cand_keys), on=col, how="left_semi")

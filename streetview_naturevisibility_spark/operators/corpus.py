@@ -39,14 +39,16 @@ from pyspark.sql.types import (
 )
 
 from streetview_naturevisibility_spark.operators.dedup import shingles_col
-from streetview_naturevisibility_spark.session import materialize
+from streetview_naturevisibility_spark.session import (
+    broadcast_or_shuffle,
+    fits,
+    materialize,
+)
 
 
 # ------------------------------------------------------------------
 # connected components over near-dup pairs
 # ------------------------------------------------------------------
-# edge sets up to this many rows are closed by a driver-side union-find
-_DRIVER_MAX_EDGES = 2_000_000
 
 
 def _cc_star(edges: DataFrame, max_iters: int) -> DataFrame:
@@ -165,16 +167,16 @@ def duplicate_clusters(
     The pair input is materialized ONCE: the upstream LSH pipeline is
     the expensive part and must not re-run per round.
 
-    Adaptive path: when the (materialized) edge set is small —
-    ``_DRIVER_MAX_EDGES`` rows, the broadcast-threshold idea applied to
-    CC — the components are closed with a driver-side union-find on
-    the collected edges (bounded collect, the kmeans_fit precedent)
-    instead of 3-5 distributed rounds of join+aggregate+checkpoint
-    jobs. Output is identical (min-id labels, member counts; integral
-    ids only — string ids keep the distributed path so byte-wise vs
-    codepoint min ordering can never diverge). Dedup graphs are pair-
-    member-sized, far smaller than the corpus, so real funnels at any
-    corpus scale usually take this path.
+    Adaptive path: when the (materialized) edge set ``fits`` the
+    session's driver byte budget (``session.fits``; about 84 stored
+    bytes per (long, long) edge row) the components are closed with a
+    driver-side union-find on the collected edges instead of 3-5
+    distributed rounds of join+aggregate+checkpoint jobs (256 MiB is
+    about 3.2M edge rows). Output is identical (min-id labels, member
+    counts; integral ids only — string ids keep the distributed path so
+    byte-wise vs codepoint min ordering can never diverge). Dedup
+    graphs are pair-member-sized, far smaller than the corpus, so real
+    funnels at any corpus scale usually take this path.
     """
     edges = materialize(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
@@ -187,7 +189,7 @@ def duplicate_clusters(
     )
     src_type = edges.schema["src"].dataType
     integral = isinstance(src_type, (ByteType, ShortType, IntegerType, LongType))
-    if integral and edges.count() <= _DRIVER_MAX_EDGES:
+    if integral and fits(edges):
         import pandas as pd
         from pyspark.sql.types import StructField, StructType
 
@@ -285,13 +287,15 @@ def dedup_keep_canonical(
     docs: DataFrame, clusters: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Drop every clustered doc except its cluster's canonical keeper
-    (min id). Docs in no cluster pass through. One left join on the
-    doc id — the cluster frame is pair-member-sized, broadcastable in
-    most real corpora (duplicate fraction << corpus)."""
-    drop = clusters.where(F.col("doc_id") != F.col("cluster_id")).select(
-        F.col("doc_id").alias(id_col)
+    (min id). Docs in no cluster pass through. One left-anti join on
+    the doc id; the ids to drop are materialized and broadcast when
+    they fit (``session.broadcast_or_shuffle``)."""
+    drop = materialize(
+        clusters.where(F.col("doc_id") != F.col("cluster_id")).select(
+            F.col("doc_id").alias(id_col)
+        )
     )
-    return docs.join(F.broadcast(drop), id_col, "left_anti")
+    return docs.join(broadcast_or_shuffle(drop), id_col, "left_anti")
 
 
 # ------------------------------------------------------------------

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from ..session import materialize
+from ..session import broadcast_or_shuffle, materialize
 
 # the permutation domain: (a*h + b) mod 2^32 with a odd is a bijection
 # of the 32-bit hash space. The modulus MUST be <= the hash range —
@@ -436,24 +436,17 @@ def minhash_lsh_pairs(
         .where(F.col("a.id") < F.col("b.id"))
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     )
-    cand = pairs_small.union(pairs_big).distinct()
 
-    # Verify joins read the materialized shingle frame. The candidate
-    # set is materialized (it is consumed by both verify joins) and,
-    # when small, broadcast into them so the shingle frame is never
-    # shuffled (guide §3.1; a checkpointed frame carries no size
-    # statistics, so Catalyst would otherwise pick a sort-merge join).
-    cand = materialize(cand)
-    small_cand = cand.count() <= 5_000_000
-    sh = sh_frame
-    sh_a = sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a")
-    sh_b = sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b")
-    j1 = sh_a.join(F.broadcast(cand) if small_cand else cand, "id_a")
-    verified = (
-        sh_b.join(F.broadcast(j1), "id_b")
-        if small_cand
-        else j1.join(sh_b, "id_b")
-    )
+    # Verify: the pairs meet the shingle frame twice, once per side.
+    # Each join broadcasts its pair-side frame only when its stored size
+    # fits (session.fits), so the shingle frame streams instead of
+    # shuffling. The second pair side carries the sh_a arrays; it is
+    # materialized so that it is measured like any other broadcast.
+    cand = materialize(pairs_small.union(pairs_big).distinct())
+    sh_a = sh_frame.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a")
+    sh_b = sh_frame.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b")
+    j1 = materialize(sh_a.join(broadcast_or_shuffle(cand), "id_a"))
+    verified = sh_b.join(broadcast_or_shuffle(j1), "id_b")
     verified = (
         verified.withColumn("jaccard", jaccard_col(F.col("sh_a"), F.col("sh_b")))
         .where(F.col("jaccard") >= F.lit(jaccard_threshold))

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
-from ..session import materialize
+from ..session import broadcast_or_shuffle, materialize
 
 
 def cosine_col(vec_col, query: list[float]):
@@ -723,16 +723,17 @@ def semantic_dedup(
             )
         )
         capped, metrics = _cap_buckets(s, ["list_id"], max_cluster)
-        # the (small, dup-ids-only) frame is materialized so repeated
-        # consumer actions don't re-run the pair stage. When the dup set
-        # is genuinely small (it is materialized, so the count is
-        # free), broadcast it so the kept-flag attach never shuffles
-        # the assignment frame — a checkpointed frame has
-        # no size statistics, so Catalyst would otherwise sort-merge.
-        dominated = materialize(_local_cluster_dups(capped, threshold, keep))
-        dup_flag = dominated.withColumn("_dup", F.lit(True))
-        if dominated.count() <= 10_000_000:
-            dup_flag = F.broadcast(dup_flag)
+        # the dup-ids-only flag frame is materialized so repeated
+        # consumer actions don't re-run the pair stage, and broadcast
+        # when it fits so the kept-flag attach never shuffles the
+        # assignment frame.
+        dup_flag = broadcast_or_shuffle(
+            materialize(
+                _local_cluster_dups(capped, threshold, keep).withColumn(
+                    "_dup", F.lit(True)
+                )
+            )
+        )
     else:
         cos_arr = F.array(
             *[cosine_col(F.col("v"), [float(x) for x in c]) for c in centroids]

@@ -755,6 +755,63 @@ def contamination_overlap(
 _CHUNK_PACK = 2**31  # packed (doc_id, pos) canonical key — pos < 2^31
 
 
+def _drop_repeated_units(
+    df: DataFrame, id_col: str, units, caller: str, eligible=None
+):
+    """The repeated-unit dedup core shared by ``chunk_dedup``,
+    ``chunk_dedup_cdc`` and ``span_dedup_c4``.
+
+    ``units`` is the per-row array of text units (chunks or spans).
+    ONE groupBy on md5(unit) carries the instance count and the
+    packed-min (id, pos) canonical; every other instance of a
+    >=2-occurrence unit is killed, collected per doc, and filtered out
+    of ``units`` per row (the text itself never shuffles). Units
+    failing ``eligible`` (a predicate on the unit column) never dedup.
+
+    -> (df left-joined with the per-doc ``_kill`` position set, the
+    kept-units array column).
+    """
+    # the packed (id, pos) canonical key needs an integral id: a string
+    # id would implicitly cast to double -> NULL, making _canon NULL and
+    # the != filter drop every kill (silent no-op). Fail fast instead.
+    from pyspark.sql import types as T
+
+    id_type = df.schema[id_col].dataType
+    if not isinstance(
+        id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    ):
+        raise TypeError(
+            f"{caller} needs an integral {id_col!r} (fits 32 bits) "
+            f"for its packed (id, pos) canonical key; got {id_type}"
+        )
+    exploded = df.select(
+        F.col(id_col).alias("id"), F.posexplode(units).alias("pos", "unit")
+    )
+    if eligible is not None:
+        exploded = exploded.where(eligible(F.col("unit")))
+    keyed = exploded.select("id", "pos", F.md5("unit").alias("uk"))
+    packed = F.col("id") * F.lit(_CHUNK_PACK) + F.col("pos")
+    dup = (
+        keyed.groupBy("uk")
+        .agg(F.count(F.lit(1)).alias("_n"), F.min(packed).alias("_canon"))
+        .where(F.col("_n") > 1)
+        .select("uk", "_canon")
+    )
+    kills = (
+        keyed.join(dup, "uk", "inner")
+        .where(packed != F.col("_canon"))
+        .groupBy("id")
+        .agg(F.collect_set("pos").alias("_kill"))
+    )
+    kept = F.filter(
+        units,
+        lambda c, i: ~F.array_contains(
+            F.coalesce(F.col("_kill"), F.array().cast("array<int>")), i
+        ),
+    )
+    return df.join(kills, F.col(id_col) == F.col("id"), "left"), kept
+
+
 def chunk_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -793,19 +850,6 @@ def chunk_dedup(
     O = int(offset)
     if O < 0 or O >= L:
         raise ValueError("offset must be in [0, chunk_chars)")
-    # the packed (id, pos) canonical key needs an integral id: a string
-    # id would implicitly cast to double -> NULL, making _canon NULL and
-    # the != filter drop every kill (silent no-op). Fail fast instead.
-    from pyspark.sql import types as T
-
-    id_type = df.schema[id_col].dataType
-    if not isinstance(
-        id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    ):
-        raise TypeError(
-            f"chunk_dedup needs an integral {id_col!r} (fits 32 bits) "
-            f"for its packed (id, pos) canonical key; got {id_type}"
-        )
     # grid phase: chunk i covers [O + i*L, O + (i+1)*L); the first O
     # chars are protected like the tail (offset != 0 is the SHIFTED
     # second pass of chunk_dedup_shifted — see the recall-boundary
@@ -816,56 +860,20 @@ def chunk_dedup(
         F.lit(0).cast("long"),
     )
 
-    def _chunks():
-        idx = F.sequence(F.lit(0).cast("long"), n_full - 1)
-        mk = F.transform(
-            idx,
-            lambda i: F.col(text_col).substr(
-                (i * F.lit(L) + F.lit(O) + 1).cast("int"), F.lit(L)
-            ),
-        )
-        # sequence(0, stop) DESCENDS when stop < 0 — guard short docs
-        return F.when(n_full >= 1, mk).otherwise(
-            F.array().cast("array<string>")
-        )
-
-    chunks = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(_chunks()).alias("pos", "chunk"),
-    ).select("id", "pos", F.md5("chunk").alias("ck"))
-    dup = (
-        chunks.groupBy("ck")
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.min(
-                F.col("id") * F.lit(_CHUNK_PACK) + F.col("pos")
-            ).alias("_canon"),
-        )
-        .where(F.col("_n") > 1)
-        .select("ck", "_canon")
+    mk = F.transform(
+        F.sequence(F.lit(0).cast("long"), n_full - 1),
+        lambda i: F.col(text_col).substr(
+            (i * F.lit(L) + F.lit(O) + 1).cast("int"), F.lit(L)
+        ),
     )
-    kills = (
-        chunks.join(dup, "ck", "inner")
-        .where(
-            F.col("id") * F.lit(_CHUNK_PACK) + F.col("pos")
-            != F.col("_canon")
-        )
-        .groupBy("id")
-        .agg(F.collect_set("pos").alias("_kill"))
-    )
+    # sequence(0, stop) DESCENDS when stop < 0 — guard short docs
+    chunks = F.when(n_full >= 1, mk).otherwise(F.array().cast("array<string>"))
+    joined, kept_arr = _drop_repeated_units(df, id_col, chunks, "chunk_dedup")
     head = F.col(text_col).substr(F.lit(1), F.lit(O))
     tail = F.col(text_col).substr(
         (n_full * F.lit(L) + F.lit(O) + 1).cast("int"), F.length(text_col)
     )
-    kept_arr = F.filter(
-        _chunks(),
-        lambda c, i: ~F.array_contains(
-            F.coalesce(F.col("_kill"), F.array().cast("array<int>")), i
-        ),
-    )
-    out = df.join(
-        kills, F.col(id_col) == F.col("id"), "left"
-    ).select(
+    return joined.select(
         F.col(id_col),
         F.concat(head, F.array_join(kept_arr, ""), tail).alias(
             "text_deduped"
@@ -873,7 +881,6 @@ def chunk_dedup(
         F.coalesce(n_full, F.lit(0)).cast("long").alias("n_chunks"),
         F.coalesce(F.size("_kill"), F.lit(0)).cast("long").alias("n_removed"),
     )
-    return out
 
 
 def chunk_dedup_shifted(
@@ -958,16 +965,6 @@ def chunk_dedup_cdc(
     D = int(avg_tokens)
     if D < 2:
         raise ValueError("avg_tokens must be >= 2")
-    from pyspark.sql import types as T
-
-    id_type = df.schema[id_col].dataType
-    if not isinstance(
-        id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    ):
-        raise TypeError(
-            f"chunk_dedup_cdc needs an integral {id_col!r}; got {id_type}"
-        )
-
     tk = F.split(F.col(text_col), " ")
 
     def _is_cut(t):
@@ -979,64 +976,33 @@ def chunk_dedup_cdc(
             == 0
         )
 
-    def _chunks():
-        n = F.size(tk)
-        cuts = F.filter(
-            F.sequence(F.lit(1), n), lambda i: _is_cut(F.element_at(tk, i))
-        )
-        starts = F.concat(
-            F.array(F.lit(1)), F.transform(cuts, lambda c: c + 1)
-        )
-        ends = F.concat(cuts, F.array(n))
-        raw = F.zip_with(
+    n = F.size(tk)
+    cuts = F.filter(
+        F.sequence(F.lit(1), n), lambda i: _is_cut(F.element_at(tk, i))
+    )
+    starts = F.concat(F.array(F.lit(1)), F.transform(cuts, lambda c: c + 1))
+    ends = F.concat(cuts, F.array(n))
+    chunks = F.filter(
+        F.zip_with(
             starts,
             ends,
             lambda s, e: F.when(
                 e >= s, F.concat_ws(" ", F.slice(tk, s, e - s + 1))
             ),
-        )
-        return F.filter(raw, lambda c: c.isNotNull())
-
-    chunks = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(_chunks()).alias("pos", "chunk"),
-    ).select(
-        "id",
-        "pos",
-        F.md5("chunk").alias("ck"),
-        (F.size(F.split(F.col("chunk"), " ")) >= min_tokens).alias("elig"),
-    )
-    dup = (
-        chunks.where(F.col("elig"))
-        .groupBy("ck")
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.min(F.col("id") * F.lit(_CHUNK_PACK) + F.col("pos")).alias(
-                "_canon"
-            ),
-        )
-        .where(F.col("_n") > 1)
-        .select("ck", "_canon")
-    )
-    kills = (
-        chunks.where(F.col("elig"))
-        .join(dup, "ck", "inner")
-        .where(
-            F.col("id") * F.lit(_CHUNK_PACK) + F.col("pos") != F.col("_canon")
-        )
-        .groupBy("id")
-        .agg(F.collect_set("pos").alias("_kill"))
-    )
-    kept_arr = F.filter(
-        _chunks(),
-        lambda c, i: ~F.array_contains(
-            F.coalesce(F.col("_kill"), F.array().cast("array<int>")), i
         ),
+        lambda c: c.isNotNull(),
     )
-    return df.join(kills, F.col(id_col) == F.col("id"), "left").select(
+    joined, kept_arr = _drop_repeated_units(
+        df,
+        id_col,
+        chunks,
+        "chunk_dedup_cdc",
+        eligible=lambda c: F.size(F.split(c, " ")) >= min_tokens,
+    )
+    return joined.select(
         F.col(id_col),
         F.array_join(kept_arr, " ").alias("text_deduped"),
-        F.coalesce(F.size(_chunks()), F.lit(0)).cast("long").alias("n_chunks"),
+        F.coalesce(F.size(chunks), F.lit(0)).cast("long").alias("n_chunks"),
         F.coalesce(F.size("_kill"), F.lit(0)).cast("long").alias("n_removed"),
     )
 
@@ -1400,53 +1366,6 @@ def score_quality_classifier(
     )
 
 
-def score_quality_classifier_streaming(
-    docs: DataFrame,
-    weights: np.ndarray,
-    bias: float,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Streaming-safe classifier scoring: fully STATELESS per-row plan
-    (no aggregation, no watermark) usable inside ``readStream -> ...
-    -> writeStream`` append mode — the batch scorer's per-doc-margin
-    groupBy is a streaming aggregation and would force update mode.
-
-    Shape: the bucket array is computed by the same pure-codegen
-    md5-prefix hash as the batch path (JVM side), then ONE vectorized
-    Arrow UDF maps each array to its margin by NumPy fancy-indexing
-    into the closure-held weight vector (O(1) per probe — a literal
-    Spark map would linear-scan its 4096 entries per lookup). NULL
-    texts are filtered (they are ABSENT from the batch scorer's
-    output; batch == stream row-for-row is pytest-gated).
-    """
-    from pyspark.sql.types import DoubleType
-
-    n_buckets = len(weights)
-    w = np.asarray(weights, dtype=np.float64)
-    b = float(bias)
-
-    @F.pandas_udf(DoubleType())
-    def margin(bs: pd.Series) -> pd.Series:
-        out = np.empty(len(bs))
-        for i, arr in enumerate(bs):
-            a = np.asarray(arr, dtype=np.int64)
-            out[i] = w[a].sum() / len(a) + b
-        return pd.Series(out)
-
-    arr = hashed_ngram_buckets_col(text_col, n_buckets)
-    return (
-        docs.where(F.col(text_col).isNotNull())
-        .select(F.col(id_col), arr.alias("_fb"))
-        .select(
-            id_col,
-            F.round(
-                F.lit(1.0) / (F.lit(1.0) + F.exp(-margin(F.col("_fb")))), 6
-            ).alias("clf_prob"),
-        )
-    )
-
-
 # ------------------------------------------------------------------
 # Encoding cleanup (the CCNet/RefinedWeb "fix_text" stage): undo the
 # most common UTF-8-read-as-Latin-1 mojibake, normalize exotic spaces,
@@ -1679,16 +1598,6 @@ def span_dedup_c4(
     n = int(n_sents)
     if n < 1:
         raise ValueError("n_sents must be >= 1")
-    from pyspark.sql import types as T
-
-    id_type = df.schema[id_col].dataType
-    if not isinstance(
-        id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    ):
-        raise TypeError(
-            f"span_dedup_c4 needs an integral {id_col!r} (fits 32 bits) "
-            f"for its packed (id, pos) canonical key; got {id_type}"
-        )
     # sentence boundary = terminal-punct run + whitespace, marked with
     # U+0001 via capture+backreference (RE2-compatible, so the DuckDB
     # twin restates it verbatim — no lookbehind)
@@ -1698,58 +1607,18 @@ def span_dedup_c4(
     sents = F.split(marked, "\u0001")
     n_spans = F.floor(F.size(sents) / F.lit(n))
 
-    def _spans():
-        idx = F.sequence(F.lit(0).cast("long"), n_spans - 1)
-        mk = F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", F.slice(sents, (i * n + 1).cast("int"), n)
-            ),
-        )
-        return F.when(n_spans >= 1, mk).otherwise(
-            F.array().cast("array<string>")
-        )
-
-    spans = (
-        df.where(F.col(text_col).isNotNull())
-        .select(
-            F.col(id_col).alias("id"),
-            F.posexplode(_spans()).alias("pos", "span"),
-        )
-        .select("id", "pos", F.md5("span").alias("sk"))
+    mk = F.transform(
+        F.sequence(F.lit(0).cast("long"), n_spans - 1),
+        lambda i: F.concat_ws(" ", F.slice(sents, (i * n + 1).cast("int"), n)),
     )
-    dup = (
-        spans.groupBy("sk")
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.min(
-                F.col("id") * F.lit(_CHUNK_PACK) + F.col("pos")
-            ).alias("_canon"),
-        )
-        .where(F.col("_n") > 1)
-        .select("sk", "_canon")
-    )
-    kills = (
-        spans.join(dup, "sk", "inner")
-        .where(
-            F.col("id") * F.lit(_CHUNK_PACK) + F.col("pos")
-            != F.col("_canon")
-        )
-        .groupBy("id")
-        .agg(F.collect_set("pos").alias("_kill"))
-    )
+    spans = F.when(n_spans >= 1, mk).otherwise(F.array().cast("array<string>"))
+    joined, kept_arr = _drop_repeated_units(df, id_col, spans, "span_dedup_c4")
     remainder = F.concat_ws(
         " ",
         F.slice(
             sents,
             (n_spans * n + 1).cast("int"),
             (F.size(sents) - n_spans * n).cast("int"),
-        ),
-    )
-    kept_arr = F.filter(
-        _spans(),
-        lambda c, i: ~F.array_contains(
-            F.coalesce(F.col("_kill"), F.array().cast("array<int>")), i
         ),
     )
     rebuilt = F.concat_ws(
@@ -1761,9 +1630,7 @@ def span_dedup_c4(
             lambda s: s != "",
         ),
     )
-    return df.join(
-        kills, F.col(id_col) == F.col("id"), "left"
-    ).select(
+    return joined.select(
         F.col(id_col),
         F.when(F.col(text_col).isNotNull(), rebuilt).alias("text_deduped"),
         F.coalesce(n_spans, F.lit(0)).cast("long").alias("n_spans"),

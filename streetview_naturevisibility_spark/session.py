@@ -10,6 +10,10 @@ sandbox it runs on local[N]. All settings below are cluster-safe:
 - shuffle partitions default to a sandbox-friendly value; on a real
   cluster set ``spark.sql.shuffle.partitions`` ~ 2-3x total cores (AQE
   coalesces the excess).
+
+It also holds the two policies every operator shares: ``materialize``
+(the one way to go eager) and ``fits``/``broadcast_or_shuffle`` (the one
+byte budget for broadcasts and collects to the driver).
 """
 
 from __future__ import annotations
@@ -17,6 +21,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -107,3 +112,53 @@ def materialize(df: DataFrame) -> DataFrame:
     one function, when a workload needs it.
     """
     return df.localCheckpoint(eager=True)
+
+
+# The one size budget: a materialized frame whose stored blocks are at
+# most this many bytes may be broadcast or collected to the driver.
+_DRIVER_MAX_BYTES = 256 << 20
+
+
+def _stored_bytes(df: DataFrame) -> int | None:
+    """Bytes the block manager holds for a frame ``materialize`` returned
+    (memory plus disk), or None when the storage status has not yet seen
+    every partition. Runs no Spark job."""
+    plan = df._jdf.queryExecution().analyzed()
+    rdd = plan.rdd() if plan.getClass().getSimpleName() == "LogicalRDD" else None
+    if rdd is None or not rdd.getStorageLevel().isValid():
+        raise TypeError("fits() measures only a frame returned by materialize()")
+    n_parts = rdd.getNumPartitions()
+    if n_parts == 0:
+        return 0
+    # the storage status is fed by the listener bus; a reading that has
+    # not seen every block is a lower bound and cannot prove a fit
+    for info in df.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo():
+        if info.id() == rdd.id() and info.numCachedPartitions() == n_parts:
+            return info.memSize() + info.diskSize()
+    return None
+
+
+def fits(df: DataFrame) -> bool:
+    """True when a frame returned by ``materialize`` stores at most
+    ``_DRIVER_MAX_BYTES``: the one test behind every broadcast-or-shuffle
+    and collect-to-driver decision.
+
+    The size is what the block manager recorded for the frame's blocks,
+    read without a job. Spark's own plan statistics cannot answer this:
+    a materialized frame is sized from the estimate of the plan before
+    the checkpoint, and that estimate counts one element per array
+    column (Spark 4.1.2: 200k rows x 20-long arrays estimated at 2.4 MB,
+    stored as 52 MB), so the planner broadcasts frames far past its
+    threshold. A row count misses the same array payload. Raises
+    ``TypeError`` for any other frame, so no caller falls back to a
+    guess; a frame whose storage status is incomplete does not fit.
+    """
+    n = _stored_bytes(df)
+    return n is not None and n <= _DRIVER_MAX_BYTES
+
+
+def broadcast_or_shuffle(df: DataFrame) -> DataFrame:
+    """``df`` as one side of a join: broadcast when it ``fits``, otherwise
+    hinted to a sort-merge join. The hint matters: without it Spark may
+    broadcast the *other* side from the same undercounting estimate."""
+    return F.broadcast(df) if fits(df) else df.hint("merge")

@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from streetview_naturevisibility_spark.operators import corpus
+from streetview_naturevisibility_spark import session
 from streetview_naturevisibility_spark.operators.corpus import (
     dedup_keep_canonical,
     duplicate_clusters,
@@ -24,8 +24,9 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture
 def distributed_cc(monkeypatch):
     """Close every edge set with the distributed rounds: small test
-    graphs otherwise take the driver-side union-find."""
-    monkeypatch.setattr(corpus, "_DRIVER_MAX_EDGES", 0)
+    graphs otherwise fit the driver byte budget and take the driver-side
+    union-find."""
+    monkeypatch.setattr(session, "_DRIVER_MAX_BYTES", 0)
 
 
 # ------------------------------------------------------------------
@@ -93,7 +94,7 @@ def test_clusters_random_graph(spark):
 
 
 def _check_star(spark, pairs: list[tuple[int, int]]):
-    assert corpus._DRIVER_MAX_EDGES == 0, "star must run distributed"
+    assert session._DRIVER_MAX_BYTES == 0, "star must run distributed"
     pdf = spark.createDataFrame(pairs, "id_a: long, id_b: long")
     got = {
         r.doc_id: (r.cluster_id, r.cluster_size)
@@ -346,7 +347,7 @@ class TestDriverUnionFind:
             "id_a long, id_b long",
         )
         fast = duplicate_clusters(pairs).toPandas()
-        monkeypatch.setattr(corpus, "_DRIVER_MAX_EDGES", 0)
+        monkeypatch.setattr(session, "_DRIVER_MAX_BYTES", 0)
         slow = duplicate_clusters(pairs).toPandas()
         key = ["doc_id", "cluster_id", "cluster_size"]
         a = fast[key].sort_values(key).reset_index(drop=True)

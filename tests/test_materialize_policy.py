@@ -1,9 +1,12 @@
-"""One materialization policy: no module in the package (or the
-contract queries in ``__spark_entry__.py``) picks its own method or
-storage level. Every reuse point calls ``session.materialize``; this
-test parses the sources with ``ast`` (no Spark needed) and fails on any
+"""One materialization policy and one sizing policy: no module in the
+package (or the contract queries in ``__spark_entry__.py``) picks its
+own method or storage level, and none sizes a frame by its row count.
+Every reuse point calls ``session.materialize`` and every broadcast or
+collect-to-driver decision ``session.fits``; this test parses the
+sources with ``ast`` (no Spark needed) and fails on any
 ``.localCheckpoint(``/``.persist(``/``.cache(``/``.checkpoint(`` call or
-``StorageLevel`` name anywhere else."""
+``StorageLevel`` name outside ``session.materialize``, and on any
+comparison with a ``.count()`` call as an operand."""
 
 from __future__ import annotations
 
@@ -93,3 +96,48 @@ def test_guard_catches_each_form():
     elsewhere = os.path.join(PKG, "operators", "x.py")
     assert kinds(elsewhere) == sorted(every_form + [".localCheckpoint("])
     assert kinds(SESSION) == sorted(every_form)
+
+
+def row_count_guards(path: str, source: str) -> list[str]:
+    """``file:line`` for every comparison that has a ``.count()`` call
+    (a Spark job's row count) as an operand."""
+    rel = os.path.relpath(path, ROOT)
+    lines = set()
+    for node in ast.walk(ast.parse(source, filename=path)):
+        if isinstance(node, ast.Compare) and any(
+            isinstance(op, ast.Call)
+            and isinstance(op.func, ast.Attribute)
+            and op.func.attr == "count"
+            and not op.args
+            and not op.keywords
+            for op in [node.left, *node.comparators]
+        ):
+            lines.add(node.lineno)
+    return [f"{rel}:{line}" for line in sorted(lines)]
+
+
+def test_no_row_count_size_guard():
+    found = []
+    for path in _sources():
+        with open(path, encoding="utf-8") as f:
+            found.extend(row_count_guards(path, f.read()))
+    assert not found, "size frames with session.fits instead:\n" + "\n".join(
+        found
+    )
+
+
+def test_row_count_guard_catches_each_form():
+    src = (
+        "a = df.count() <= 5_000_000\n"
+        "b = 10 > edges.count()\n"
+        "c = 0 < x.count() < cap\n"
+        "d = s.count(' ') > 2\n"
+        "e = n_rows <= cap\n"
+        "f = df.count()\n"
+    )
+    path = os.path.join(PKG, "operators", "x.py")
+    assert [g.rsplit(":", 1)[1] for g in row_count_guards(path, src)] == [
+        "1",
+        "2",
+        "3",
+    ]

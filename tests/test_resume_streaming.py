@@ -4,7 +4,6 @@ import os
 
 import numpy as np
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from streetview_naturevisibility_spark.operators.resume import (
@@ -189,15 +188,14 @@ class TestStreamingDecontamination:
 
 class TestStreamingClassifier:
     def test_stream_scoring_matches_batch(self, spark, tmp_path):
-        """File-stream docs through score_quality_classifier_streaming
-        (stateless per-row plan): probabilities equal the batch
-        scorer's row-for-row to rounding; NULL-text docs absent from
-        both."""
+        """File-stream docs through score_quality_classifier (map-only:
+        a crossJoin with a 1-row broadcast, no aggregation) in append
+        mode: probabilities equal the batch scorer's row for row; NULL-
+        text docs absent from both."""
         import numpy as np
 
         from streetview_naturevisibility_spark.operators.textops import (
             score_quality_classifier,
-            score_quality_classifier_streaming,
             train_quality_classifier,
         )
 
@@ -229,7 +227,7 @@ class TestStreamingClassifier:
         ).write.mode("overwrite").parquet(src)
 
         stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-        scored = score_quality_classifier_streaming(stream, w, b)
+        scored = score_quality_classifier(stream, w, b)
         out = str(tmp_path / "out")
         q = (
             scored.writeStream.format("parquet")
@@ -248,6 +246,4 @@ class TestStreamingClassifier:
                 spark.read.parquet(src), w, b
             ).collect()
         }
-        assert set(got) == set(batch) and 7 not in got
-        for k in got:
-            assert got[k] == pytest.approx(batch[k], abs=2e-6)
+        assert got == batch and 7 not in got

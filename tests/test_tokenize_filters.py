@@ -14,7 +14,7 @@ from streetview_naturevisibility_spark.functions.bpe import (
     pretokenize,
     train_bpe,
 )
-from streetview_naturevisibility_spark.operators import bloom as bloom_mod
+from streetview_naturevisibility_spark import session
 from streetview_naturevisibility_spark.operators.bloom import (
     bloom_anti_join,
     bloom_params,
@@ -324,9 +324,10 @@ def test_bloom_anti_join_exact(spark):
 def test_bloom_anti_join_auto_picks_side_by_candidate_count(
     spark, monkeypatch, cap, side
 ):
-    """residual="auto" broadcasts the candidate digests up to the cap
-    and falls back to the plain anti-join past it; both exact."""
-    monkeypatch.setattr(bloom_mod, "_BROADCAST_MAX_CANDIDATES", cap)
+    """residual="auto" broadcasts the candidate digests while their
+    stored bytes fit the session budget ``cap`` and falls back to the
+    plain anti-join past it; both exact."""
+    monkeypatch.setattr(session, "_DRIVER_MAX_BYTES", cap)
     batch = spark.range(0, 1000).select(
         F.col("id").alias("doc_id"),
         F.concat(F.lit("k"), F.col("id") % 400).alias("key"),
