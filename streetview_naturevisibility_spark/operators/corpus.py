@@ -713,11 +713,19 @@ def pack_rows(
     """Materialized training rows: -> (bin_id, packed_text, n_docs,
     n_tokens). Document order inside a row is ascending id
     (sort_array over (id, text) structs — deterministic under any
-    partitioning); NULL texts contribute empty segments."""
+    partitioning); NULL texts contribute empty segments.
+
+    The input is evaluated once: its (id, text[, tokens]) columns are
+    materialized at entry and feed both ``pack_assignments`` and the
+    text join-back, so a curation funnel upstream of the packer runs
+    one time, not twice. Every stored text byte reappears in the packed
+    output, so this stores no payload the operator does not produce."""
+    cols = [id_col, text_col] + ([tokens_col] if tokens_col else [])
+    src = materialize(df.select(*cols))
     asg = pack_assignments(
-        df, budget_tokens, text_col, id_col, tokens_col, bucket_span
+        src, budget_tokens, text_col, id_col, tokens_col, bucket_span
     )
-    j = df.select(
+    j = src.select(
         F.col(id_col), F.col(text_col).alias("_tx")
     ).join(asg, [id_col])
     return (

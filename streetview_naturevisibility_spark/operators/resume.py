@@ -17,7 +17,8 @@ per-partition lineage + metrics"):
   because parquet commit is all-or-nothing);
 - each write also emits ``<root>/<stage>/_lineage/part-*.json`` — one
   record per output partition with {stage, partition_id, rows, wall_ms,
-  rows_per_sec, host} — collected executor-side via mapInPandas (no
+  rows_per_sec, host} — counted executor-side via mapInArrow, which
+  passes each Arrow batch through unchanged (no pandas conversion, no
   driver round-trip of data);
 - incremental append: ``resume_delta`` anti-joins the input's key
   column against already-committed keys, so a killed run restarts
@@ -33,7 +34,7 @@ import socket
 import time
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,7 +48,7 @@ def _with_lineage(df: DataFrame, stage: str, lineage_dir: str) -> DataFrame:
     executor-side as the data streams by (Arrow-batched)."""
     schema = df.schema
 
-    def track(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def track(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
@@ -55,7 +56,7 @@ def _with_lineage(df: DataFrame, stage: str, lineage_dir: str) -> DataFrame:
         t0 = time.time()
         rows = 0
         for b in batches:
-            rows += len(b)
+            rows += b.num_rows
             yield b
         wall = time.time() - t0
         os.makedirs(lineage_dir, exist_ok=True)
@@ -70,7 +71,7 @@ def _with_lineage(df: DataFrame, stage: str, lineage_dir: str) -> DataFrame:
         with open(os.path.join(lineage_dir, f"part-{pid:05d}.json"), "w") as f:
             json.dump(rec, f)
 
-    return df.mapInPandas(track, schema)
+    return df.mapInArrow(track, schema)
 
 
 def run_stage(

@@ -4,6 +4,8 @@ The engine targets multi-executor clusters over ~100 TB inputs; in this
 sandbox it runs on local[N]. All settings below are cluster-safe:
 
 - AQE on (runtime coalescing + skew-join splitting),
+- file splits sized to the session's cores, not to a 4 MiB floor, so
+  small and mid-size scans feed every core,
 - Arrow on for every pandas UDF crossing (the only Python in the engine),
 - bounded Arrow batches so wide ``html:binary`` rows can't blow the
   Python worker heap,
@@ -34,6 +36,17 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     # 100 TB scans want larger split sizes; harmless locally.
     "spark.sql.files.maxPartitionBytes": "134217728",
+    # A file scan splits at min(maxPartitionBytes, max(openCostInBytes,
+    # (totalBytes + files * openCostInBytes) / cores)), so Spark's 4 MiB
+    # open-cost floor decides the split count of any input under about
+    # 4 MiB x cores: a 10k-doc table read as 2 tasks of 7,000 and 3,000
+    # rows on local[4], leaving half the cores idle in every stage that
+    # scanned it. At 256 KiB, totalBytes / cores decides instead and
+    # inputs past 128 MiB x cores keep 128 MiB splits. On a cluster a
+    # many-small-files table still packs into maxPartitionBytes-sized
+    # splits: each file adds its length plus 256 KiB to the split it
+    # joins, so a 128 MiB split opens at most 512 files.
+    "spark.sql.files.openCostInBytes": "262144",
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     # r7 (guide §3.1/§9): allow shuffled-hash joins when a side fits a
     # per-partition hash map instead of always sorting both sides —

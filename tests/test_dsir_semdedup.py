@@ -767,6 +767,51 @@ def test_pack_rows_materializes_ordered_rows(spark):
     assert got[1].n_docs == 3
 
 
+def test_pack_rows_evaluates_its_input_once(spark):
+    """The upstream lineage runs once: a Python UDF above the packer
+    sees every row exactly one time (not once for the assignments and
+    again for the text join-back), and the bins still equal the DuckDB
+    twin's."""
+    from streetview_naturevisibility_spark.operators.corpus import pack_rows
+    from tests.oracle import duckdb_pack_assignments
+
+    rng = np.random.RandomState(5)
+    n = 300
+    pdf = pd.DataFrame(
+        {
+            "doc_id": np.arange(n) * 3,
+            "text": [
+                " ".join("w" for _ in range(int(rng.randint(1, 40))))
+                if i % 17 else None
+                for i in range(n)
+            ],
+        }
+    )
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def upstream(t):
+        seen.add(1)
+        return t
+
+    df = spark.createDataFrame(pdf, "doc_id long, text string").withColumn(
+        "text", upstream("text")
+    )
+    got = pack_rows(df, budget_tokens=64).toPandas()
+    assert seen.value == n
+
+    exp = (
+        duckdb_pack_assignments(pdf, 64)
+        .groupby("bin_id")
+        .agg(n_docs=("doc_id", "size"), n_tokens=("n_tokens", "sum"))
+        .reset_index()
+    )
+    got = got.sort_values("bin_id").reset_index(drop=True)
+    assert got["bin_id"].tolist() == exp["bin_id"].tolist()
+    assert got["n_docs"].tolist() == exp["n_docs"].tolist()
+    assert got["n_tokens"].tolist() == exp["n_tokens"].tolist()
+
+
 def test_fix_text_two_passes_converge_interleaved_corruption(spark):
     """A property probe found single-pass non-fixpoints: control chars
     or stray markers lodged INSIDE a mojibake pair re-form the pair
